@@ -196,9 +196,8 @@ def _cell_z_threshold_case(alpha: float = 0.05, max_m: int = 60) -> str:
 
     The cell test is ``chi2_sf(z^2, 1) <= alpha/m`` — monotone in |z|, so
     it is equivalent to ``|z| >= z*(m)`` with z* bisected from the
-    engine's own chi2_sf (functions.stats.z_threshold — the SAME helper
-    the Spark operator uses, so the two sides can never diverge). This
-    sidesteps DuckDB's missing erfc.
+    engine's own chi2_sf (functions.stats.z_threshold), the function the
+    operator's cell test calls. This sidesteps DuckDB's missing erfc.
     """
     from qudo_etl_pipeline_spark.functions.stats import z_threshold
 
@@ -216,8 +215,8 @@ def _cell_z_threshold_case(alpha: float = 0.05, max_m: int = 60) -> str:
 # p = exp(-x/2) * sum_{k<dof/2} (x/2)^k / k!  (all dofs in this planted
 # schema are even: 3 clusters, 2/3/5-valued variables); the cell-level
 # dof=1 test is the precomputed |z| threshold above. Expression shapes
-# (operand order, *1.0 promotions, ROUND points) mirror the Spark plan
-# so doubles agree bit-for-bit after rounding.
+# (operand order, *1.0 promotions, ROUND points) mirror the engine's
+# arithmetic so doubles agree bit-for-bit after rounding.
 _DELIVER_ORACLE = f"""
     WITH wide AS (
       SELECT CASE WHEN o_totalprice < 100000 THEN 'budget'

@@ -513,7 +513,7 @@ def magnitude_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     tgt_cols = [f"prio_{i}_tgt" for i in range(5)]  # 5 priority levels
-    m = magnitude(deliver, labeled, tgt_cols)
+    m = magnitude(deliver.collect(), labeled, tgt_cols)
     rows = [
         (seg, val)
         for seg, val in sorted(m.items(), key=lambda kv: none_last_key(kv[0]))
@@ -563,7 +563,7 @@ def sig_spread_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    _, _, groups, _ = significant_variables_and_spread(deliver)
+    _, _, groups, _ = significant_variables_and_spread(deliver.collect())
     rows = [
         (seg, prefix, round(prop, 6))
         for seg, by_prefix in groups.items()

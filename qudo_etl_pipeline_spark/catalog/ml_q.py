@@ -808,7 +808,7 @@ def uniqueness_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_quantity") / 10).cast("int").cast("string")
         ).alias("sig_more_category"),
     ).distinct()
-    u = B.uniqueness(deliver)
+    u = B.uniqueness(deliver.collect())
     return spark.createDataFrame(
         [(seg, round(val, 6))
          for seg, val in sorted(u.items(), key=lambda kv: none_last_key(kv[0]))],
@@ -905,7 +905,7 @@ def communicability_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_mktsegment").alias("targeting_seg"),
         F.col("c_name").alias("q_code"),
     )
-    c = B.communicability(deliver, pattern="7|13")
+    c = B.communicability(deliver.collect(), pattern="7|13")
     return spark.createDataFrame(
         [(seg, int(n))
          for seg, n in sorted(c["data"].items(), key=lambda kv: none_last_key(kv[0]))],

@@ -16,64 +16,61 @@ Re-implements (reference: src/kraken/app/metrics.py):
   proportions.
 - M37 get_all_metrics (:814-911): the composition layer.
 
-All inputs are DataFrames: `deliver` is the deliver-stats output of
-operators/contingency.py (columns q_code, targeting_seg,
-sig_more_category array, chi_2_result, pop_mode...), `labeled` is the
-respondent table with a `prediction` column. Everything aggregates to
-segment-cardinality results before collecting (tiny) — the deliver
-table itself is already aggregate-sized (variables x segments).
+`deliver` is the deliver-stats output of operators/contingency.py
+(q_code, targeting_seg, sig_more_category list, chi_2_result,
+pop_mode...) as COLLECTED rows: it is aggregate-sized (significant
+variables x segments, at most |variables| x |clusters| rows), so the
+deliver metrics are plain Python over it and launch no Spark job.
+:func:`get_all_metrics` collects it once for all of them. `labeled` is
+the respondent DataFrame with a `prediction` column; everything over it
+aggregates to segment-cardinality results before collecting.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import re
+from collections import Counter
+
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 
-def _pair_key() -> "F.Column":
+def _pair_key(row: Row) -> str:
     """(q_code, sig_more_category) identity: the reference tuples the
-    category list (metrics.py:330-332); arrays compare element-wise."""
-    return F.concat_ws(
-        "", F.col("q_code"), F.concat_ws("", F.col("sig_more_category"))
-    )
+    category list (metrics.py:330-332). NULLs contribute nothing."""
+    cats = row["sig_more_category"] or []
+    return (row["q_code"] or "") + "".join(c for c in cats if c is not None)
 
 
-def uniqueness(deliver: DataFrame, seg_col: str = "targeting_seg") -> dict:
-    """M28: per cluster, 1 - duplicated-pair share (metrics.py:311-337)."""
-    pairs = deliver.select(
-        F.col(seg_col).alias("seg"), _pair_key().alias("pair")
+def uniqueness(deliver: list[Row], seg_col: str = "targeting_seg") -> dict:
+    """M28: per cluster, 1 - duplicated-pair share (metrics.py:311-337).
+    A pair is duplicated when two or more non-NULL segments hold it; a
+    NULL segment is scored but never makes a pair a duplicate."""
+    pairs = [(r[seg_col], _pair_key(r)) for r in deliver]
+    owners: dict[str, set] = {}
+    for seg, pair in pairs:
+        if seg is not None:
+            owners.setdefault(pair, set()).add(seg)
+    n = Counter(seg for seg, _ in pairs)
+    n_dup = Counter(
+        seg for seg, pair in pairs if len(owners.get(pair, ())) > 1
     )
-    dup = (
-        pairs.groupBy("pair")
-        .agg(F.countDistinct("seg").alias("n_segs"))
-        .withColumn("dup", (F.col("n_segs") > 1).cast("int"))
-    )
-    rows = (
-        pairs.join(dup.select("pair", "dup"), "pair")
-        .groupBy("seg")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("dup").alias("n_dup"),
-        )
-        .collect()
-    )
-    return {r["seg"]: 1 - r["n_dup"] / r["n"] for r in rows}
+    return {seg: 1 - n_dup[seg] / n[seg] for seg in n}
 
 
 def communicability(
-    deliver: DataFrame, seg_col: str = "targeting_seg", pattern: str = "psy|ae"
+    deliver: list[Row], seg_col: str = "targeting_seg", pattern: str = "psy|ae"
 ) -> dict:
     """M29 (metrics.py:340-361): distinct significant q_codes matching
     the creative/psychometric regex per segment; avg = total / number of
-    segments in the WHOLE deliver table."""
-    comm = (
-        deliver.filter(F.col("q_code").rlike(pattern))
-        .groupBy(seg_col)
-        .agg(F.countDistinct("q_code").alias("communicability"))
-        .collect()
-    )
-    n_segs = deliver.select(seg_col).distinct().count()
-    data = {r[seg_col]: r["communicability"] for r in comm}
+    segments in the WHOLE deliver table (a NULL segment counts)."""
+    rx = re.compile(pattern)
+    codes: dict = {}
+    for r in deliver:
+        if r["q_code"] is not None and rx.search(r["q_code"]):
+            codes.setdefault(r[seg_col], set()).add(r["q_code"])
+    data = {seg: len(qs) for seg, qs in codes.items()}
+    n_segs = len({r[seg_col] for r in deliver})
     avg = sum(data.values()) / n_segs if n_segs else float("nan")
     return {"data": data, "avg": avg}
 
@@ -129,7 +126,7 @@ def social_presence(
 
 
 def magnitude(
-    deliver: DataFrame,
+    deliver: list[Row],
     labeled: DataFrame,
     tgt_cols: list[str],
     pred: str = "prediction",
@@ -144,13 +141,11 @@ def magnitude(
     sizes = labeled.groupBy(pred).agg(F.count(F.lit(1)).alias("n")).collect()
     total = sum(r["n"] for r in sizes)
     pct = {r[pred]: round(r["n"] / total, 2) for r in sizes}
-    sig_counts = {
-        r[seg_col]: r["n"]
-        for r in deliver.filter(F.lower(F.col("q_code")).contains("tgt"))
-        .groupBy(seg_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
+    sig_counts = Counter(
+        r[seg_col]
+        for r in deliver
+        if r["q_code"] is not None and "tgt" in r["q_code"].lower()
+    )
     out = {}
     for seg, share in pct.items():
         ratio = sig_counts.get(str(seg), sig_counts.get(seg, 0)) / num_tgt
@@ -179,65 +174,50 @@ def message_reach(social: dict, signal: dict) -> dict | float:
     return out
 
 
-def question_prefix_col(col: str = "q_code") -> "F.Column":
+def question_prefix(code: str | None) -> str | None:
     """Prefix before '_' when present, else the whole code
-    (metrics.py:192-197)."""
-    return F.when(
-        F.col(col).contains("_"), F.split(F.col(col), "_")[0]
-    ).otherwise(F.col(col))
+    (metrics.py:192-197); a NULL code is its own (NULL) prefix."""
+    return code.split("_")[0] if code is not None else None
 
 
 def significant_variables_and_spread(
-    deliver: DataFrame,
+    deliver: list[Row],
     alpha: float = 0.05,
     seg_col: str = "targeting_seg",
 ) -> tuple[dict, dict, dict, dict]:
     """M36 (metrics.py:208-231): counts of significant variables per
     segment (all / `_tgt`), and per-question-prefix proportions of
     significant variables vs all variables (all / `_tgt` universes)."""
-    sig = deliver.filter(F.col("chi_2_result") <= alpha)
-    num_sig = {
-        r[seg_col]: r["n"]
-        for r in sig.groupBy(seg_col).agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    sig_tgt = sig.filter(F.col("q_code").contains("_tgt"))
-    num_sig_tgt = {
-        r[seg_col]: r["n"]
-        for r in sig_tgt.groupBy(seg_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
 
-    def spread(filtered: DataFrame, universe: DataFrame) -> dict:
-        # the denominator is the prefix count over the UNFILTERED frame
+    def is_tgt(r: Row) -> bool:
+        return r["q_code"] is not None and "_tgt" in r["q_code"]
+
+    sig = [
+        r
+        for r in deliver
+        if r["chi_2_result"] is not None and r["chi_2_result"] <= alpha
+    ]
+    sig_tgt = [r for r in sig if is_tgt(r)]
+
+    def spread(filtered: list[Row], universe: list[Row]) -> dict:
+        # the denominator is the prefix count over the UNFILTERED rows
         # across ALL segments — the reference's overall_counts
         # (metrics.py:198-204) divides exactly so; per-segment universes
         # would read more naturally but would break parity
-        overall = {
-            r["p"]: r["n"]
-            for r in universe.select(question_prefix_col().alias("p"))
-            .groupBy("p")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        rows = (
-            filtered.select(F.col(seg_col).alias("seg"), question_prefix_col().alias("p"))
-            .groupBy("seg", "p")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
+        overall = Counter(question_prefix(r["q_code"]) for r in universe)
+        counts = Counter(
+            (r[seg_col], question_prefix(r["q_code"])) for r in filtered
         )
         out: dict = {}
-        for r in rows:
-            out.setdefault(r["seg"], {})[r["p"]] = (
-                r["n"] / overall[r["p"]] if overall.get(r["p"]) else float("nan")
-            )
+        for (seg, p), n in counts.items():
+            out.setdefault(seg, {})[p] = n / overall[p]
         return out
 
     return (
-        num_sig,
-        num_sig_tgt,
+        dict(Counter(r[seg_col] for r in sig)),
+        dict(Counter(r[seg_col] for r in sig_tgt)),
         spread(sig, deliver),
-        spread(sig_tgt, deliver.filter(F.col("q_code").contains("_tgt"))),
+        spread(sig_tgt, [r for r in deliver if is_tgt(r)]),
     )
 
 
@@ -280,6 +260,7 @@ def get_all_metrics(
         metrics["model_consistency"] = float("nan")
         metrics["label_consistency"] = float("nan")
     if deliver is not None:
+        deliver = deliver.collect()
         metrics["uniqueness"] = uniqueness(deliver)
         comm = communicability(deliver)
         metrics["communicability_clusters"] = comm["data"]

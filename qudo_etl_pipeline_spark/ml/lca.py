@@ -133,10 +133,10 @@ def _estep_sql(
     """The per-class log-joint as SQL text — the driver emits ONE string
     per EM iteration instead of thousands of py4j Column calls (the
     profiled cost of the literal-expression E-step was ~6.5k JVM
-    round-trips per iteration; same single-parse device as
-    functions.stats.chi2_sf_sql). All parameter literals are emitted in
-    codegen-stable form (folded map literals for theta, _sql_dw-wrapped
-    scalars) so every iteration reuses one compiled loop body."""
+    round-trips per iteration; one JVM parse per string). All parameter
+    literals are emitted in codegen-stable form (folded map literals for
+    theta, _sql_dw-wrapped scalars) so every iteration reuses one
+    compiled loop body."""
     out = []
     log_floor = _sql_d(math.log(floor))
     for c_i in range(k):

@@ -53,16 +53,24 @@ def classification_metrics(
     """accuracy / weighted precision / recall / f1 / Cohen's kappa from
     the confusion matrix (sklearn 'weighted' average semantics,
     metrics.py:761-766). Rounded 3 as the reference."""
-    conf = {
-        (r[label_col], r[pred_col]): r["n"]
-        for r in scored.groupBy(label_col, pred_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-        # a pair with a NULL truth or NULL prediction is unscoreable —
-        # it belongs to no confusion-matrix cell (and None labels would
-        # crash the sorted() below); NULL-free inputs are unaffected
-        if r[label_col] is not None and r[pred_col] is not None
-    }
+    return _metrics_from_confusion(
+        {
+            (r[label_col], r[pred_col]): r["n"]
+            for r in scored.groupBy(label_col, pred_col)
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+            # a pair with a NULL truth or NULL prediction is unscoreable —
+            # it belongs to no confusion-matrix cell (and None labels
+            # would crash the label sort); NULL-free inputs are
+            # unaffected
+            if r[label_col] is not None and r[pred_col] is not None
+        }
+    )
+
+
+def _metrics_from_confusion(conf: dict) -> dict:
+    """The metrics of :func:`classification_metrics` from a
+    {(truth, prediction): count} confusion matrix."""
     labels = sorted({k[0] for k in conf} | {k[1] for k in conf})
     n = sum(conf.values())
     if n == 0:
@@ -253,18 +261,20 @@ def signal_loss(
     )
     rf = RandomForestClassifier(seed=seed, labelCol="label").fit(train)
     result = {"all": classification_metrics(rf.transform(test), "label", "prediction")}
-    full = assembler.transform(base).cache()
-    try:
-        scored = rf.transform(full)
-        segments = sorted(
-            r["label"] for r in base.select("label").distinct().collect()
+    # per segment: each segment's full rows, from ONE confusion matrix
+    # over every row split by truth label on the driver (labels are
+    # complete cases, so no cell is unscoreable)
+    conf = {
+        (r["label"], r["prediction"]): r["n"]
+        for r in rf.transform(assembler.transform(base))
+        .groupBy("label", "prediction")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    for seg in sorted({truth for truth, _ in conf}):
+        result[str(int(seg))] = _metrics_from_confusion(
+            {k: n for k, n in conf.items() if k[0] == seg}
         )
-        for seg in segments:
-            result[str(int(seg))] = classification_metrics(
-                scored.filter(F.col("label") == seg), "label", "prediction"
-            )
-    finally:
-        full.unpersist()
     return result
 
 

@@ -1,30 +1,28 @@
 """Contingency-table / chi-squared inference core.
 
 Re-implements the reference's ``ChiSquaredTester`` engine
-(reference: src/kraken/app/inference/chisquared_tester.py) as a
-single-shuffle Spark plan. The reference loops
-``clusters x variables`` times over the full pandas table, computing one
-``pd.crosstab`` per pair (chisquared_tester.py:1434-1589). Here the wide
-table is melted once (plans/melt.py) and ONE
-``groupBy(variable, cluster, value).count()`` produces every crosstab cell
-simultaneously; all remaining statistics are a per-variable ARRAY
-program (:func:`_var_frame`): one further ``groupBy(variable)`` collects
-each variable's cells, and the dense grid, expected counts, chi-squared
-test (pure-JVM survival function), post-hoc residuals and deliver
-assembly are higher-order-function expressions over that array.
+(reference: src/kraken/app/inference/chisquared_tester.py). The
+reference loops ``clusters x variables`` times over the full pandas
+table, computing one ``pd.crosstab`` per pair
+(chisquared_tester.py:1434-1589). Here the wide table is melted once
+(plans/melt.py) and ONE ``groupBy(variable, cluster, value).count()``
+produces every crosstab cell simultaneously. That aggregation is the
+only Spark work: :class:`ContingencyTables` collects its rows once, and
+the finalize step — dense grids, expected counts, the chi-squared test,
+post-hoc residuals and deliver rows — runs on the driver in plain
+Python, the same small-crosstab arithmetic the reference runs with
+``chi2_contingency`` and ``round`` (chisquared_tester.py:331-379). The
+results come back as ``createDataFrame`` frames, so sinks and
+downstream Spark consumers keep their DataFrame interface.
 
 Scale notes (100 TB design):
 - The only full-data shuffle is the cell aggregation, with map-side
-  partial aggregation; its output cardinality is
-  |variables| x |categories| x |clusters| — millions at worst, independent
-  of row count.
-- Everything downstream operates per variable on that variable's cell
-  array — the same schema-bound state the old dense grid held per
-  partition key, now in exactly one row per variable (no re-exchange
-  per key switch, no skew pile-up: the widest variable is bounded by
-  its categorical domain).
-- No collect() on the big table; cluster sizes ride the SAME cell
-  aggregation as a constant pseudo-variable.
+  partial aggregation; cluster sizes ride the SAME aggregation as a
+  constant pseudo-variable, so the input is scanned once.
+- The collected cell table is schema-bound: at most
+  |variables| x |values| x |clusters| rows (a few hundred for a
+  30-question survey), independent of row count. The finalize step is
+  linear in it.
 
 Semantics replicated from the reference (file:line cites):
 - "Not shown" rows excluded from crosstabs        (chisquared_tester.py:229-236)
@@ -41,36 +39,123 @@ Semantics replicated from the reference (file:line cites):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import math
+from dataclasses import dataclass
+from functools import cached_property
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from qudo_etl_pipeline_spark.functions.rounding import ref_round
-from qudo_etl_pipeline_spark.functions.stats import chi2_sf_sql, z_threshold_table
+from qudo_etl_pipeline_spark.functions.stats import chi2_sf
 from qudo_etl_pipeline_spark.plans.melt import melt
 
 NOT_SHOWN = "Not shown"
 NOT_SELECTED = "not selected"
 
 
-def _cache_once(df: DataFrame) -> DataFrame:
-    """Materialize-once through the operator-cache REGISTRY.
+def _round(x: float, ndigits: int) -> float:
+    """Python ``round`` (the reference's rounding), with a zero result
+    always +0.0: the round-half-even digits are Python's, the sign of
+    zero is Spark's (Python keeps -0.0 for small negatives)."""
+    return round(x, ndigits) + 0.0
 
-    Catalog queries sharing one session build bit-identical cell plans
-    (e.g. chi2_stat and contingency_cells over the same survey view) —
-    the registry returns the one live entry instead of issuing a
-    duplicate ``.cache()``. Registry (rather than a bare guarded
-    ``.cache()``, the pre-r13 form) so the cells/dense/varframe caches
-    share the harness release lifecycle: a ``prefix_cache_scope`` exit
-    or ``clear_prefix_caches`` drops them, which is what lets the bench
-    measure every pass as one full execution (r12 verdict item 1).
-    """
-    from qudo_etl_pipeline_spark.operators.prefix import (
-        acquire_operator_cache,
+
+class _Cell(NamedTuple):
+    value: str
+    cluster: object
+    seg: str | None  # the cluster as Spark casts it to string
+    observed: int
+    w_observed: float
+
+
+class _DenseCell(NamedTuple):
+    value: str
+    cluster: object
+    observed: int
+    w_observed: float
+    expected: float
+    adj_residual: float | None
+
+
+@dataclass
+class _Crosstab:
+    """One variable's crosstab with pd.crosstab shape semantics and its
+    scipy-semantics chi-squared test."""
+
+    variable: str
+    cells: list[_Cell]  # every cell of the variable, sorted by value
+    values: list  # crosstab rows, sorted
+    clusters: list  # crosstab columns, sorted
+    dense: list[_DenseCell]  # the (value x cluster) grid, value-major
+    n: int
+    dof: int
+    yates: bool
+    chi2_stat: float | None
+    p_value: float
+
+    def post_hoc(self, alpha: float) -> list[str]:
+        """'pos'/'neg'/'neu' per dense cell: |z| >= 1.96 AND the
+        Bonferroni test chi2_sf(z^2, 1) <= alpha/m over the table's m
+        cells (chisquared_tester.py:544-552)."""
+        m = len(self.dense)
+        return [
+            "neu"
+            if d.adj_residual is None
+            or abs(d.adj_residual) < 1.96
+            or chi2_sf(d.adj_residual * d.adj_residual, 1) > alpha / m
+            else ("pos" if d.observed > d.expected else "neg")
+            for d in self.dense
+        ]
+
+
+def _crosstab(variable: str, cells: list[_Cell]) -> _Crosstab | None:
+    """The finalize step for one variable; None when no cell survives
+    the crosstab filter (the variable then has no test at all)."""
+    # _observed's filter: NULL clusters and "Not shown" on either axis
+    # never enter a crosstab (chisquared_tester.py:229-236)
+    obs = {
+        (c.value, c.cluster): c
+        for c in cells
+        if c.cluster is not None and NOT_SHOWN not in (c.value, c.seg)
+    }
+    if not obs:
+        return None
+    values = sorted({v for v, _ in obs})
+    clusters = sorted({k for _, k in obs})
+    row_tot = dict.fromkeys(values, 0)
+    col_tot = dict.fromkeys(clusters, 0)
+    for (v, k), c in obs.items():
+        row_tot[v] += c.observed
+        col_tot[k] += c.observed
+    n = sum(row_tot.values())
+    # value-major, zero-filled; every sum below runs in this order, so
+    # the statistics are reproducible bit for bit
+    dense = []
+    plain = corrected = 0.0
+    for v in values:
+        for k in clusters:
+            c = obs.get((v, k))
+            o, w = (c.observed, c.w_observed) if c else (0, 0.0)
+            # through DOUBLE before the multiply: exact below 2^53
+            e = float(row_tot[v]) * col_tot[k] / n
+            d = o - e
+            plain += d * d / e
+            g = max(abs(d) - 0.5, 0.0)
+            corrected += g * g / e
+            # rounded to 3 before any test (chisquared_tester.py:473);
+            # a one-row or one-column table has no residual
+            s = math.sqrt(e * (1 - row_tot[v] / n) * (1 - col_tot[k] / n))
+            z = _round(d / s, 3) if s else None
+            dense.append(_DenseCell(v, k, o, w, e, z))
+    dof = (len(values) - 1) * (len(clusters) - 1)
+    # Yates requested iff any dense cell <= 5, applied iff dof == 1
+    yates = min(d.observed for d in dense) <= 5
+    stat = (corrected if yates and dof == 1 else plain) if dof > 0 else None
+    return _Crosstab(
+        variable, cells, values, clusters, dense, n, dof, yates, stat,
+        chi2_sf(stat, dof) if dof > 0 else 1.0,
     )
-
-    return acquire_operator_cache(df)
 
 
 @dataclass
@@ -82,64 +167,56 @@ class ContingencyTables:
                  sentinel values (callers filter as needed).
     ``cluster_sizes`` — one row per cluster: ``cluster_n`` rows,
                  ``cluster_w`` total weight.
-    ``n_rows`` — total row count of the input table (lazy: the first
-                 access runs the cluster-size aggregate, which also
-                 materializes the cell cache — construction itself
-                 launches NO job, so building the plan stays free).
-    ``_cached`` — the cached frame behind ``cells``/``cluster_sizes``;
-                 call :meth:`unpersist` when inference is done (long-lived
-                 drivers run many schemes x algorithms — pipeline.py).
+
+    Both are lazy views of ONE aggregation, so construction launches no
+    job. The first statistic computed from the tables collects that
+    aggregation once (:attr:`_collected`); every later one reuses the
+    rows on the driver.
     """
 
     cells: DataFrame
     cluster_sizes: DataFrame
     cluster_col: str
     weighted: bool
-    _cached: DataFrame | None = None
-    _n_rows: int | None = None
-    # derived cached frames (variable-array frame, dense grid) —
-    # registered lazily so repeated calls share one entry and
-    # unpersist() releases everything
-    _derived: dict = field(default_factory=dict)
+    _all_cells: DataFrame
+    _row_marker: str
 
-    def dense_with_expected(self) -> DataFrame:
-        """The dense (value x cluster) grid with expected frequencies,
-        cached: it is the shared input of BOTH branches of
-        :func:`post_hoc_cells` (the per-variable aggregate and the
-        per-cell residuals), and without a cache the grid+windows
-        subtree is compiled and executed once per consuming branch.
-        Cardinality is the cell table's (schema-bound, row-count
-        independent), so the cache is tiny at any scale."""
-        if "dense" not in self._derived:
-            self._derived["dense"] = _cache_once(
-                _dense_with_expected(self.cells, self.cluster_col)
-            )
-        return self._derived["dense"]
+    @cached_property
+    def _collected(self) -> tuple[list[_Crosstab], dict, float]:
+        """(crosstabs sorted by variable, {cluster: (cluster_n,
+        cluster_w, targeting_seg)}, total input rows)."""
+        cc = self.cluster_col
+        rows = self._all_cells.select(
+            "variable",
+            "value",
+            F.col(cc).alias("cluster"),
+            F.col(cc).cast("string").alias("seg"),
+            "observed",
+            "w_observed",
+        ).collect()
+        sizes, total, by_var = {}, 0, {}
+        for r in rows:
+            if r.variable == self._row_marker:
+                # the NULL-cluster row counts toward the total but can
+                # never be a targeting segment
+                total += r.observed
+                if r.cluster is not None:
+                    sizes[r.cluster] = (r.observed, r.w_observed, r.seg)
+            else:
+                by_var.setdefault(r.variable, []).append(
+                    _Cell(r.value, r.cluster, r.seg, r.observed, r.w_observed)
+                )
+        tabs = [
+            _crosstab(v, sorted(by_var[v], key=lambda c: c.value))
+            for v in sorted(by_var)
+        ]
+        return [t for t in tabs if t is not None], sizes, float(total)
 
-    def var_frame(self) -> DataFrame:
-        """One row per variable with the complete crosstab as arrays plus
-        every per-variable statistic (:func:`_var_frame`), cached: it is
-        the shared input of chi2_by_variable, post_hoc_cells,
-        deliver_stats and cramers_v. One row per variable — tiny at any
-        scale."""
-        if "varframe" not in self._derived:
-            self._derived["varframe"] = _cache_once(_var_frame(self))
-        return self._derived["varframe"]
-
-    @property
-    def n_rows(self) -> int:
-        if self._n_rows is None:
-            self._n_rows = int(
-                self.cluster_sizes.agg(F.sum("cluster_n")).collect()[0][0]
-            )
-        return self._n_rows
-
-    def unpersist(self) -> None:
-        if self._cached is not None:
-            self._cached.unpersist()
-        for df in self._derived.values():
-            df.unpersist()
-        self._derived.clear()
+    def _frame(self, rows: list, schema: str) -> DataFrame:
+        # one partition: the table is driver-sized, and a sink written
+        # from it stays one file
+        spark = self.cells.sparkSession
+        return spark.createDataFrame(rows, schema).coalesce(1)
 
 
 def detect_cell_skew(
@@ -208,24 +285,19 @@ def contingency_tables(
     )
 
     # null weights count as 0 (same as sum's null-skip) so w_observed is
-    # never NULL — the weighted-mode argmax sorts on a struct of it, and
-    # a NULL field would sort first instead of last
+    # never NULL — the weighted denominators and the weighted-mode argmax
+    # need a number
     w = (
         F.coalesce(F.col(weight_col).cast("double"), F.lit(0.0))
         if weight_col
         else F.lit(1.0)
     )
     # THE one big-data shuffle (and the only pass over the input). The
-    # result is tiny (|vars| x |values| x |clusters|), so cache it: every
-    # downstream statistic (chi2, post-hoc, modes, denominators, cluster
-    # sizes) re-reads it instead of re-scanning the input.
-    # Lay the cached cells out hash-partitioned by `variable`: every
-    # downstream window, groupBy and join keys on `variable` (or a
-    # superset, which a hash layout on the subset satisfies), so they all
-    # reuse this one layout instead of re-exchanging the tiny table across
-    # `shuffle.partitions` mostly-empty tasks. The repartition carries no
-    # explicit partition count, so AQE right-sizes it from the measured
-    # cell-table size (session enables cached-plan output repartitioning).
+    # result is tiny (|vars| x |values| x |clusters|) and is collected
+    # once by ContingencyTables; the catalog's Spark-side consumers of
+    # `cells` key on `variable` (or a superset), so the hash layout by
+    # `variable` serves them without a re-exchange. The repartition
+    # carries no explicit partition count, so AQE right-sizes it.
     keys = ["variable", cluster_col, "value"]
     nn = long.filter(F.col("value").isNotNull()).withColumn("_w", w)
     if salt_cells == "auto":
@@ -247,7 +319,7 @@ def contingency_tables(
             F.count(F.lit(1)).alias("observed"),
             F.sum("_w").alias("w_observed"),
         )
-    all_cells = _cache_once(cells_agg.repartition("variable"))
+    all_cells = cells_agg.repartition("variable")
     cells = all_cells.filter(F.col("variable") != row_marker)
 
     cluster_sizes = all_cells.filter(F.col("variable") == row_marker).select(
@@ -260,7 +332,8 @@ def contingency_tables(
         cluster_sizes=cluster_sizes,
         cluster_col=cluster_col,
         weighted=weight_col is not None,
-        _cached=all_cells,
+        _all_cells=all_cells,
+        _row_marker=row_marker,
     )
 
 
@@ -291,9 +364,8 @@ def _dense_grid(cells: DataFrame, cluster_col: str) -> DataFrame:
 
     Built as one groupBy(variable) + double explode rather than two
     distinct-projections joined back: every step keys on ``variable`` so
-    the cached cells layout satisfies it and the whole densification adds
-    ZERO exchanges (the old shape compiled to 2 distincts + 2 joins,
-    re-executed per consuming branch).
+    the cells' hash layout satisfies it and the whole densification adds
+    ZERO exchanges.
     """
     observed = _observed(cells, cluster_col)
     sets = observed.groupBy("variable").agg(
@@ -309,257 +381,23 @@ def _dense_grid(cells: DataFrame, cluster_col: str) -> DataFrame:
     )
 
 
-def _dense_with_expected(cells: DataFrame, cluster_col: str) -> DataFrame:
-    """Dense grid + row/col/grand totals + expected frequency per cell.
-
-    The shared physical input of the chi-squared statistics AND the
-    post-hoc residuals — built once so the (distinct x2 + join x2 +
-    3 windows) subplan is not compiled and executed twice per query.
-    """
-    dense = _dense_grid(cells, cluster_col)
-    w_var = Window.partitionBy("variable")
-    w_row = Window.partitionBy("variable", "value")
-    w_col = Window.partitionBy("variable", cluster_col)
-    # one select, not a withColumn chain: every withColumn re-analyzes
-    # the (deep) plan — fusing them measurably cuts the deliver-stats
-    # build time
-    row_tot = F.sum("observed").over(w_row)
-    col_tot = F.sum("observed").over(w_col)
-    n = F.sum("observed").over(w_var)
-    return dense.select(
-        "*",
-        row_tot.alias("row_tot"),
-        col_tot.alias("col_tot"),
-        n.alias("n"),
-        (row_tot * col_tot / n).alias("expected"),
-    )
-
-
-def _var_frame(tables: ContingencyTables) -> DataFrame:
-    """One row per variable: the complete crosstab as ARRAYS plus every
-    per-variable statistic (dense grid with expected counts, chi-squared,
-    p-value).
-
-    This is the tiny-table half of the inference engine as an array
-    program. After the one big cell shuffle (:func:`contingency_tables`),
-    a single ``groupBy(variable)`` collects each variable's cells —
-    cardinality |values| x |clusters|, schema-bound and row-count
-    independent, exactly the per-variable slice the old window/join
-    pipeline operated on — and the dense grid, row/col totals, expected
-    frequencies and the scipy-semantics test all become
-    higher-order-function expressions inside narrow projections. The old
-    shape re-exchanged the (tiny) cell table ~15 times because every
-    window/groupBy/join key switch (variable -> (variable,value) ->
-    (variable,cluster) -> ...) forced a new hash layout; this shape has
-    exactly ONE downstream exchange (the per-variable collect) and the
-    rest is map-side, so deliver-stats latency is scan-bound instead of
-    stage-scheduling-bound. The 100 TB story is unchanged: per-group
-    state is the same schema-bound cell set the dense grid always held.
-
-    Semantics are :func:`_observed` / :func:`_dense_grid` and the
-    scipy ``chi2_contingency`` finalizer verbatim (reference
-    chisquared_tester.py:229-256, 331-379). Fold orders over the sorted arrays are
-    deterministic, where the old per-partition sums were engine-order
-    (a strict improvement; counts are integers, so the sums are exact
-    either way). The array expressions are emitted as SQL text — same
-    reason as chi2_sf_col: one parser round-trip instead of hundreds of
-    py4j calls, which is most of this plan's build latency. r12 cont.:
-    the layered ``select("*", ...)`` chain is fused into ONE
-    ``selectExpr`` whose later entries reference earlier aliases
-    laterally (Spark >= 3.4 lateral column aliases; the analyzer
-    expands them to the identical nested-Project tree the old layers
-    produced, so the optimized plan — and every hash — is unchanged),
-    cutting the per-build py4j/analysis round-trips further.
-    """
-    cluster_col = tables.cluster_col
-    cc = cluster_col.replace("`", "``")
-
-    cl = tables.cells.groupBy("variable").agg(
-        F.expr(
-            "array_sort(collect_list(struct("
-            f"value, `{cc}` AS cluster, observed, w_observed)))"
-        ).alias("_cl")
-    )
-
-    # _observed verbatim: NULL clusters and "Not shown" on either axis
-    # never enter a crosstab (chisquared_tester.py:229-236); variables
-    # with no valid cell have no crosstab at all (the old dense grid
-    # simply had no rows for them)
-    vf = cl.selectExpr(
-        "variable",
-        "_cl",
-        "filter(_cl, x -> x.cluster IS NOT NULL"
-        f" AND x.value <> '{NOT_SHOWN}'"
-        f" AND CAST(x.cluster AS STRING) <> '{NOT_SHOWN}') AS _obs",
-    ).filter(F.size("_obs") > 0)
-
-    # ONE fused projection, later aliases referencing earlier ones
-    # laterally. In document order: value/cluster domains and the grand
-    # total; the observed-cell lookup and row/col totals as little maps
-    # (the array spelling of _dense_grid's left join and totals
-    # windows); the dense (value x cluster) grid, zero-filled,
-    # value-major (downstream per-cluster filters are already
-    # value-ascending, the order the deliver arrays contract to), with
-    # expected through DOUBLE before the multiply (identical below
-    # 2^53, immune to bigint-product overflow under ANSI mode); and the
-    # scipy-semantics finalizer (Yates requested iff any dense cell
-    # <= 5, applied iff dof == 1, clamped at |O-E|; degenerate tables
-    # give p = 1.0).
-    vf = vf.selectExpr(
-        "variable",
-        "_cl",
-        "_obs",
-        "array_sort(array_distinct(transform(_obs, x -> x.value)))"
-        " AS _vals",
-        "array_sort(array_distinct(transform(_obs, x -> x.cluster)))"
-        " AS _cls",
-        "aggregate(_obs, CAST(0 AS BIGINT), (a, x) -> a + x.observed)"
-        " AS _n",
-        "map_from_entries(transform(_obs, x -> named_struct("
-        "'key', named_struct('v', x.value, 'c', x.cluster),"
-        " 'val', named_struct('o', x.observed, 'w', x.w_observed))))"
-        " AS _cm",
-        "map_from_entries(transform(_vals, v -> named_struct("
-        "'key', v, 'val', aggregate(filter(_obs, x -> x.value = v),"
-        " CAST(0 AS BIGINT), (a, x) -> a + x.observed)))) AS _rt",
-        "map_from_entries(transform(_cls, c -> named_struct("
-        "'key', c, 'val', aggregate(filter(_obs, x -> x.cluster = c),"
-        " CAST(0 AS BIGINT), (a, x) -> a + x.observed)))) AS _ct",
-        "flatten(transform(_vals, v -> transform(_cls, c ->"
-        " named_struct('value', v, 'cluster', c,"
-        " 'observed', coalesce("
-        "element_at(_cm, named_struct('v', v, 'c', c)).o,"
-        " CAST(0 AS BIGINT)),"
-        " 'w_observed', coalesce("
-        "element_at(_cm, named_struct('v', v, 'c', c)).w, 0.0D),"
-        " 'row_tot', element_at(_rt, v),"
-        " 'col_tot', element_at(_ct, c))))) AS _d0",
-        "transform(_d0, x -> named_struct("
-        "'value', x.value, 'cluster', x.cluster,"
-        " 'observed', x.observed, 'w_observed', x.w_observed,"
-        " 'row_tot', x.row_tot, 'col_tot', x.col_tot,"
-        " 'expected', CAST(x.row_tot AS DOUBLE) * x.col_tot / _n))"
-        " AS _dense",
-        "aggregate(_dense, 0.0D, (a, x) ->"
-        " a + pow(x.observed - x.expected, 2) / x.expected)"
-        " AS _stat_plain",
-        "aggregate(_dense, 0.0D, (a, x) -> a + pow(greatest("
-        "abs(x.observed - x.expected) - 0.5D, 0.0D), 2) / x.expected)"
-        " AS _stat_yates",
-        "array_min(transform(_dense, x -> x.observed)) AS _min_obs",
-        "CAST(size(_vals) AS BIGINT) AS n_values",
-        "CAST(size(_cls) AS BIGINT) AS n_clusters",
-        "(n_values - 1) * (n_clusters - 1) AS dof",
-        "_min_obs <= 5 AS yates",
-        "CASE WHEN dof > 0 THEN CASE WHEN yates AND dof = 1"
-        " THEN _stat_yates ELSE _stat_plain END END AS chi2_stat",
-        "CASE WHEN dof > 0 THEN "
-        + chi2_sf_sql("chi2_stat", "dof")
-        + " ELSE 1.0D END AS p_value",
-    )
-    # prune the intermediates (_obs/_cm/_rt/_ct/_d0) so the cached
-    # frame keeps the exact pre-fusion schema every consumer pins
-    return vf.select(
-        "variable",
-        "_cl",
-        "_vals",
-        "_cls",
-        "_n",
-        "_dense",
-        "_stat_plain",
-        "_stat_yates",
-        "_min_obs",
-        "n_values",
-        "n_clusters",
-        "dof",
-        "yates",
-        "chi2_stat",
-        "p_value",
-    )
-
-
-def _dense_sig_sql(alpha: float) -> str:
-    """SQL text of the significance-labelled dense-cell array.
-
-    ``transform(_dense, ...)`` adding ``adj_residual`` (ref_round to 3,
-    chisquared_tester.py:475) and ``post_hoc`` in {'pos','neg','neu'}
-    (cell |z| >= 1.96 AND Bonferroni chi2_sf(z^2,1) <= alpha/m,
-    chisquared_tester.py:544-552). Emitted as ONE SQL string because the
-    Bonferroni fallback (tables wider than the precomputed z-threshold
-    range, i.e. ``_z_thr`` NULL) embeds the chi-squared survival-function
-    fold with the lambda variable in scope — the exact per-cell test the
-    old row-level shape ran, now inside the array program. References
-    the outer columns ``_n``, ``_z_thr``, ``_m``.
-    """
-    from qudo_etl_pipeline_spark.functions.rounding import (
-        ref_round_spark_sql,
-    )
-
-    rr = ref_round_spark_sql(
-        "try_divide(x.observed - x.expected,"
-        " sqrt(x.expected * (1 - x.row_tot / _n) * (1 - x.col_tot / _n)))",
-        3,
-    )
-    base = (
-        "'value', x.value, 'cluster', x.cluster, 'observed', x.observed,"
-        " 'w_observed', x.w_observed, 'expected', x.expected"
-    )
-    da = f"transform(_dense, x -> named_struct({base}, 'adj_residual', {rr}))"
-    sf = chi2_sf_sql("x.adj_residual * x.adj_residual", "1")
-    sig = (
-        "(abs(x.adj_residual) >= 1.96D) AND (CASE WHEN _z_thr IS NOT NULL"
-        f" THEN abs(x.adj_residual) >= _z_thr"
-        f" ELSE {sf} <= {alpha!r}D / _m END)"
-    )
-    return (
-        f"transform({da}, x -> named_struct({base},"
-        " 'adj_residual', x.adj_residual,"
-        f" 'post_hoc', CASE WHEN {sig} THEN CASE WHEN"
-        " x.observed > x.expected THEN 'pos' ELSE 'neg' END"
-        " ELSE 'neu' END))"
-    )
-
-
-def _with_z_thresholds(vf: DataFrame, alpha: float) -> DataFrame:
-    """Join the per-variable Bonferroni |z| threshold onto the variable
-    frame: ``_m = n_values * n_clusters`` cell tests share one
-    ``alpha/m`` threshold, looked up from the once-per-process bisected
-    table (same floats as the scalar z_threshold the DuckDB oracle
-    uses; no driver collect, plan construction stays job-free). Tables
-    wider than the precomputed range get ``_z_thr`` NULL and fall back
-    to the in-plan survival function inside :func:`_dense_sig_sql`.
-    """
-    spark = vf.sparkSession
-    # memoized per (session, alpha): createDataFrame costs ~100 ms of
-    # driver time per call, and the table is immutable
-    cache = getattr(spark, "_qudo_zthr_frames", None)
-    if cache is None:
-        cache = {}
-        spark._qudo_zthr_frames = cache
-    thr_df = cache.get(alpha)
-    if thr_df is None:
-        tbl = z_threshold_table(alpha)
-        thr_df = spark.createDataFrame(
-            sorted(tbl.items()), "_m: bigint, _z_thr: double"
-        )
-        cache[alpha] = thr_df
-    return vf.select(
-        "*",
-        (F.col("n_values") * F.col("n_clusters")).cast("bigint").alias("_m"),
-    ).join(F.broadcast(thr_df), "_m", "left")
-
-
-def chi2_by_variable(
-    tables: ContingencyTables, dense: DataFrame | None = None
-) -> DataFrame:
+def chi2_by_variable(tables: ContingencyTables) -> DataFrame:
     """Per-variable chi-squared test over all crosstabs at once.
 
-    Returns: variable, chi2_stat, dof, p_value, yates, n_values, n_clusters.
-    Statistical semantics live in :func:`_var_frame`; ``dense`` is
-    accepted for backwards compatibility and ignored.
+    Returns: variable, chi2_stat, dof, yates, n_values, n_clusters,
+    p_value — one row per variable with at least one crosstab cell,
+    ordered by variable. ``chi2_stat`` is NULL where dof == 0.
     """
-    return tables.var_frame().select(
-        "variable", "chi2_stat", "dof", "yates", "n_values", "n_clusters", "p_value"
+    tabs, _, _ = tables._collected
+    return tables._frame(
+        [
+            (t.variable, t.chi2_stat, t.dof, t.yates, len(t.values),
+             len(t.clusters), t.p_value)
+            for t in tabs
+        ],
+        "variable string, chi2_stat double, dof bigint not null,"
+        " yates boolean, n_values bigint not null,"
+        " n_clusters bigint not null, p_value double",
     )
 
 
@@ -571,36 +409,29 @@ def post_hoc_cells(tables: ContingencyTables, alpha: float = 0.05) -> DataFrame:
     reference does before squaring — chisquared_tester.py:475) and
     ``post_hoc`` in {'pos','neg','neu'}.
     """
-    cluster_col = tables.cluster_col
-    # The p <= alpha filter drops whole variables before any per-cell
-    # work; the significance-labelled dense array (_dense_sig_sql) then
-    # explodes straight to the per-cell rows. adj_residual uses
-    # try_divide (a constant variable has row_tot == n -> zero divisor;
-    # the NULL keeps ANSI mode from throwing) and ref_round to 3
-    # (reference rounds z with Python round before squaring,
-    # chisquared_tester.py:473).
-    vf = _with_z_thresholds(
-        tables.var_frame().filter(F.col("p_value") <= alpha), alpha
+    tabs, _, _ = tables._collected
+    cc = tables.cluster_col
+    ctype = tables.cells.schema[cc].dataType.simpleString()
+    cc_ddl = cc.replace("`", "``")
+    return tables._frame(
+        [
+            (t.variable, d.cluster, d.value, d.observed, d.w_observed,
+             d.expected, d.adj_residual, label, t.p_value, t.chi2_stat)
+            for t in tabs
+            if t.p_value <= alpha
+            for d, label in zip(t.dense, t.post_hoc(alpha))
+        ],
+        f"variable string, `{cc_ddl}` {ctype}, value string,"
+        " observed bigint not null, w_observed double not null,"
+        " expected double, adj_residual double, post_hoc string not null,"
+        " p_value double, chi2_stat double",
     )
-    cc = cluster_col.replace("`", "``")
-    vf = vf.selectExpr(
-        "variable",
-        "p_value",
-        "chi2_stat",
-        f"explode({_dense_sig_sql(alpha)}) AS _x",
-    )
-    return vf.selectExpr(
-        "variable",
-        f"_x.cluster AS `{cc}`",
-        "_x.value AS value",
-        "_x.observed AS observed",
-        "_x.w_observed AS w_observed",
-        "_x.expected AS expected",
-        "_x.adj_residual AS adj_residual",
-        "_x.post_hoc AS post_hoc",
-        "p_value",
-        "chi2_stat",
-    )
+
+
+def _pct(part: float, whole: float, ndigits: int) -> float | None:
+    """Rounded percentage; None (the reference's NaN) on a zero whole —
+    a cluster whose weights are all NULL has zero weighted size."""
+    return _round(part / whole * 100, ndigits) if whole else None
 
 
 def deliver_stats(
@@ -615,6 +446,7 @@ def deliver_stats(
       sig_more_category, category_percentages, targeting_seg
       [+ chi2_stat] [+ weighted_pop_mode, weighted_pop_mode_perc,
       weighted_category_percentages when the input was weighted]
+    ordered by (chi_2_result, q_code, targeting_seg).
 
     Reference: chisquared_tester.py:1434-1589 (lazy path) and :1671-1731.
     Divergence note: the reference's weighted_pop_mode takes
@@ -623,135 +455,73 @@ def deliver_stats(
     of the weighted count (the documented intent: "the category with the
     highest weighted sum").
     """
-    # Everything happens on the per-variable array frame: per-(variable,
-    # cluster) answer denominators (sentinel values INCLUDED — pandas
-    # value_counts(normalize=True) semantics, chisquared_tester.py:
-    # 1527-1536), both population modes ("Not shown" excluded, ties
-    # broken by ascending value like pandas .mode(),
-    # chisquared_tester.py:914-918 — min over (-count, value) structs),
-    # response rate (chisquared_tester.py:1503 — sums EVERY cluster's
-    # cells including NULL-cluster rows), and the significant "more"
-    # categories (post_hoc == 'pos', 'not selected' stripped,
-    # chisquared_tester.py:1653 + helper_functions.py:24-30; arrays
-    # ordered by category value — the dense array is built value-major,
-    # so the filtered slices are already in that order). One explode per
-    # cluster replaces the old post-hoc join + groupBy + windows; the
-    # only exchanges left are the cell shuffle, the per-variable
-    # collect, and the final ORDER BY.
-    vf = _with_z_thresholds(
-        tables.var_frame().filter(F.col("p_value") <= alpha), alpha
-    )
-
-    # total input row count and per-cluster sizes: a one-row aggregate of
-    # cluster_sizes, broadcast into the plan — not collected (plan
-    # construction stays job-free; tables.n_rows stays for callers that
-    # need the Python int). The NULL-cluster row counts toward the total
-    # but has no size-map entry (it can never be a targeting segment).
-    cc = tables.cluster_col.replace("`", "``")
-    sizes_row = tables.cluster_sizes.agg(
-        F.expr(
-            f"collect_list(struct(`{cc}` AS cluster, cluster_n,"
-            " cluster_w))"
-        ).alias("_sz"),
-        F.sum("cluster_n").cast("double").alias("_total_rows"),
-    )
-    vf = vf.crossJoin(F.broadcast(sizes_row))
-    from qudo_etl_pipeline_spark.functions.rounding import (
-        ref_round_spark_sql,
-    )
-
-    vf = vf.selectExpr(
-        "variable",
-        "_cl",
-        "_cls",
-        "p_value",
-        "chi2_stat",
-        f"{_dense_sig_sql(alpha)} AS _d3",
-        "map_from_entries(transform("
-        "filter(_sz, x -> x.cluster IS NOT NULL),"
-        " x -> named_struct('key', x.cluster,"
-        " 'val', named_struct('n', x.cluster_n, 'w', x.cluster_w))))"
-        " AS _szm",
-        "aggregate(_cl, CAST(0 AS BIGINT),"
-        " (a, x) -> a + x.observed) / _total_rows * 100"
-        " AS response_rate",
-    )
-
-    def _mode_sql(field: str) -> str:
-        return (
-            "array_min(transform(filter(_cl, x -> x.cluster = c"
-            f" AND x.value <> '{NOT_SHOWN}'),"
-            f" x -> named_struct('neg_n', -x.{field},"
-            f" 'v', x.value, 'n', x.{field})))"
-        )
-
-    percl = (
-        "transform(_cls, c -> named_struct("
-        "'cluster', c,"
-        " 'answered_n', aggregate(filter(_cl, x -> x.cluster = c),"
-        " CAST(0 AS BIGINT), (a, x) -> a + x.observed),"
-        " 'answered_w', aggregate(filter(_cl, x -> x.cluster = c),"
-        " 0.0D, (a, x) -> a + x.w_observed),"
-        f" 'm', {_mode_sql('observed')},"
-        f" 'wm', {_mode_sql('w_observed')},"
-        " 'pos', filter(_d3, x -> x.post_hoc = 'pos' AND x.cluster = c"
-        f" AND x.value <> '{NOT_SELECTED}')))"
-    )
-    vf = vf.selectExpr(
-        "variable",
-        "p_value",
-        "chi2_stat",
-        "_szm",
-        "response_rate",
-        f"explode({percl}) AS _s",
-    ).filter(F.size("_s.pos") > 0)
-
-    # try_divide in the weighted percentages: a cluster whose weights are
-    # all NULL (coalesced to 0 upstream) has answered_w = 0 — ANSI plain
-    # division would kill the whole job; NULL is the Spark-native
-    # spelling of the reference's NaN percentage
-    out = vf.selectExpr(
-        "variable AS q_code",
-        "_s.m.v AS pop_mode",
-        "response_rate",
-        ref_round_spark_sql(
-            "_s.m.n / element_at(_szm, _s.cluster).n * 100", 2
-        )
-        + " AS mode_pop_perc",
-        ref_round_spark_sql("p_value", 5) + " AS chi_2_result",
-        "transform(_s.pos, x -> x.value) AS sig_more_category",
-        "transform(_s.pos, x -> "
-        + ref_round_spark_sql("x.observed / _s.answered_n * 100", 2)
-        + ") AS category_percentages",
-        "CAST(_s.cluster AS STRING) AS targeting_seg",
-        *(
-            [ref_round_spark_sql("chi2_stat", 2) + " AS chi2_stat"]
-            if include_chi2_stat
-            else []
-        ),
-        *(
-            [
-                "_s.wm.v AS weighted_pop_mode",
-                ref_round_spark_sql(
-                    "try_divide(_s.wm.n,"
-                    " element_at(_szm, _s.cluster).w) * 100",
-                    0,
-                )
-                + " AS weighted_pop_mode_perc",
-                "transform(_s.pos, x -> "
-                + ref_round_spark_sql(
-                    "try_divide(x.w_observed, _s.answered_w) * 100", 2
-                )
-                + ") AS weighted_category_percentages",
+    tabs, sizes, total_rows = tables._collected
+    rows = []
+    for t in tabs:
+        if t.p_value > alpha:
+            continue
+        labels = t.post_hoc(alpha)
+        # response rate sums EVERY cell of the variable, NULL-cluster
+        # and sentinel cells included (chisquared_tester.py:1503)
+        response_rate = sum(c.observed for c in t.cells) / total_rows * 100
+        for k in t.clusters:
+            # significant "more" categories in value order, 'not
+            # selected' stripped and empty rows dropped
+            # (chisquared_tester.py:1653 + helper_functions.py:24-30)
+            pos = [
+                d
+                for d, label in zip(t.dense, labels)
+                if label == "pos" and d.cluster == k and d.value != NOT_SELECTED
             ]
-            if tables.weighted
-            else []
-        ),
-        # no empty-array filter needed beyond size(pos) > 0 above:
-        # NOT_SELECTED cells are stripped inside the pos filter, so the
-        # reference's empty-row drop is realized before the explode
-    ).orderBy("chi_2_result", "q_code", "targeting_seg")
-    return out
+            if not pos:
+                continue
+            # answer denominators count sentinel values (pandas
+            # value_counts(normalize=True), chisquared_tester.py:
+            # 1527-1536); modes exclude "Not shown", ties broken by
+            # ascending value like pandas .mode() (:914-918)
+            answered = [c for c in t.cells if c.cluster == k]
+            shown = [c for c in answered if c.value != NOT_SHOWN]
+            mode = min(shown, key=lambda c: (-c.observed, c.value))
+            answered_n = sum(c.observed for c in answered)
+            size_n, size_w, seg = sizes[k]
+            row = [
+                t.variable,
+                mode.value,
+                response_rate,
+                _pct(mode.observed, size_n, 2),
+                _round(t.p_value, 5),
+                [d.value for d in pos],
+                [_pct(d.observed, answered_n, 2) for d in pos],
+                seg,
+            ]
+            if include_chi2_stat:
+                row.append(_round(t.chi2_stat, 2))
+            if tables.weighted:
+                answered_w = 0.0
+                for c in answered:
+                    answered_w += c.w_observed
+                wmode = min(shown, key=lambda c: (-c.w_observed, c.value))
+                row += [
+                    wmode.value,
+                    _pct(wmode.w_observed, size_w, 0),
+                    [_pct(d.w_observed, answered_w, 2) for d in pos],
+                ]
+            rows.append(tuple(row))
+    rows.sort(key=lambda r: (r[4], r[0], r[7]))
+    schema = (
+        "q_code string, pop_mode string, response_rate double,"
+        " mode_pop_perc double, chi_2_result double,"
+        " sig_more_category array<string> not null,"
+        " category_percentages array<double> not null, targeting_seg string"
+    )
+    if include_chi2_stat:
+        schema += ", chi2_stat double"
+    if tables.weighted:
+        schema += (
+            ", weighted_pop_mode string, weighted_pop_mode_perc double,"
+            " weighted_category_percentages array<double> not null"
+        )
+    return tables._frame(rows, schema)
 
 
 def cluster_mode_list(
@@ -847,30 +617,23 @@ def discover_stats(deliver: DataFrame, n_feats: int = 10) -> DataFrame:
     )
 
 
-def cramers_v(
-    tables: "ContingencyTables", dense: DataFrame | None = None
-) -> DataFrame:
+def cramers_v(tables: ContingencyTables) -> DataFrame:
     """Cramér's V effect size per variable — the magnitude companion to
     the chi-squared p-value (p says "dependent"; V says "how much"):
     V = sqrt(chi2 / (n * (min(r, c) - 1))), in [0, 1].
 
-    Reads the per-variable array frame directly: the chi-squared columns
-    and the observation total (``_n``, the dense grid's grand total) are
-    already on the same |variables|-row frame, so the statistic is one
-    projection — no join at all. ``dense`` is accepted for backwards
-    compatibility and ignored.
+    V is derived from the statistic rounded to 6, mirroring the chi2
+    query's rounding so the oracle derives from the identical value.
     """
-    k = (
-        F.least(F.col("n_values"), F.col("n_clusters")) - F.lit(1)
-    ).cast("double")
-    # V from the 6-rounded statistic, mirroring the chi2 query's
-    # rounding so the oracle derives from the identical value
-    stat6 = F.round(F.col("chi2_stat"), 6)
-    v = F.sqrt(stat6 / (F.col("_n").cast("double") * k))
-    return tables.var_frame().select(
-        "variable",
-        stat6.alias("chi2_stat"),
-        F.col("dof").cast("bigint").alias("dof"),
-        F.col("_n").cast("bigint").alias("n_obs"),
-        F.when(k > 0, ref_round(v, 6)).alias("cramers_v6"),
+    tabs, _, _ = tables._collected
+    rows = []
+    for t in tabs:
+        k = float(min(len(t.values), len(t.clusters)) - 1)
+        stat6 = None if t.chi2_stat is None else _round(t.chi2_stat, 6)
+        v = _round(math.sqrt(stat6 / (float(t.n) * k)), 6) if k > 0 else None
+        rows.append((t.variable, stat6, t.dof, t.n, v))
+    return tables._frame(
+        rows,
+        "variable string, chi2_stat double, dof bigint not null,"
+        " n_obs bigint, cramers_v6 double",
     )

@@ -3,8 +3,8 @@ OPERATOR-CACHE REGISTRY (:func:`acquire_operator_cache` /
 :func:`prefix_cache_scope` / :func:`clear_prefix_caches`) that grew
 out of the prefix device's ranged-frame lifecycle and now governs
 every operator's materialize-once caches (curation, text, analytics,
-entity, sketches, temporal, ml, contingency, similarity — one
-plan-keyed entry per session, scope-released).
+entity, sketches, temporal, ml, similarity — one plan-keyed entry per
+session, scope-released).
 
 The prefix device itself is the machinery behind
 ``quantile_normalize`` / ``weighted_quantile`` /
@@ -105,20 +105,22 @@ def _acquire_ranged(ranged: DataFrame) -> DataFrame:
                 ranged
             ):
                 # re-arm: an external unpersist (ContextCleaner, an
-                # owner's direct release, ContingencyTables.unpersist)
-                # can drop the CacheManager entry while the registry
-                # still holds the frame — returning it uncached would
-                # silently lose the materialize-once contract (for
-                # ranged frames, a CORRECTNESS contract: both branches
-                # must observe one physical partitioning)
+                # owner's direct release) can drop the CacheManager
+                # entry while the registry still holds the frame —
+                # returning it uncached would silently lose the
+                # materialize-once contract (for ranged frames, a
+                # CORRECTNESS contract: both branches must observe one
+                # physical partitioning). The re-armed frame stays with
+                # its first owner (the scope that acquired it, or
+                # clear_prefix_caches): registering it with THIS
+                # thread's innermost scope would let that scope's exit
+                # release a cache an enclosing scope or another thread
+                # still depends on.
                 if not (
                     cand.storageLevel.useMemory
                     or cand.storageLevel.useDisk
                 ):
                     cand.cache()
-                    stack = _scope_stack()
-                    if stack:
-                        stack[-1].append(cand)
                 return cand
         # storageLevel check: the plan may already sit in Spark's
         # CacheManager (cached outside the registry, or re-acquired
@@ -168,8 +170,8 @@ def clear_prefix_caches() -> int:
     """Release EVERY live operator cache in the registry — the
     ranged frames of :func:`ranged_prefix_sums` AND every frame any
     operator routed through :func:`acquire_operator_cache` (curation,
-    text, analytics, entity, sketches, temporal, ml, contingency,
-    similarity — roughly twenty operators since r12/r13). The
+    text, analytics, entity, sketches, temporal, ml, similarity —
+    roughly twenty operators since r12/r13). The
     batch-boundary call for long-lived drivers (surgical, unlike
     ``spark.catalog.clearCache()`` which also evicts unrelated user
     caches). Returns the number of entries released.

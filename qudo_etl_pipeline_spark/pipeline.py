@@ -343,11 +343,10 @@ def run_scheme(
             id_vars=[cfg.id_col],
             salt_cells=cfg.salt_cells,
         )
-        # deliver is tiny (significant variables x segments) but feeds
-        # discover, four business metrics and the parquet sink — cache it
-        # so each consumer reads the materialized frame instead of
-        # re-executing the inference arithmetic.
-        deliver = deliver_stats(tables, alpha=1 - cfg.conf_interval).cache()
+        # deliver is computed on the driver from the collected cells and
+        # comes back as a local frame: discover, the business metrics
+        # and the parquet sink all read those rows, with no re-execution
+        deliver = deliver_stats(tables, alpha=1 - cfg.conf_interval)
         discover = discover_stats(deliver)
         # third element of the reference's return_API_data triple
         # (chisquared_tester.py:1788-1792): per-cluster modal answer
@@ -372,7 +371,6 @@ def run_scheme(
             social_df=with_pred,
         )
         metrics["algorithm"] = algo
-        tables.unpersist()  # cell cache is per-(scheme, algo); release it
         return {
             "labels": labeled,
             "deliver": deliver,
@@ -391,9 +389,8 @@ def run_scheme(
     # scheduler overlap them (fixture-scale composition measured
     # ~87 s -> ~45 s; at production scale each action is larger and the
     # overlap still hides per-job latency). Families share only
-    # read-only parent frames (cleaned/encoded caches); every
-    # per-family cache (contingency cells, deliver) is created and
-    # released inside its own thread.
+    # read-only parent frames (cleaned/encoded caches); each family's
+    # contingency cells are collected inside its own thread.
     if len(pending) == 1:
         algo, fit = pending[0]
         results[algo] = finalize_family(algo, fit)
@@ -475,9 +472,6 @@ def run_all_segmentations(
                         res["discover"],
                         f"{output_dir}/{scheme}/{algo}/discover",
                     )
-                    # sinks were the last cached readers; later accesses
-                    # (if any) lazily recompute
-                    res["deliver"].unpersist()
         metrics_df = spark.createDataFrame(
             metrics_rows,
             "survey: string, scheme: string, algorithm: string, "

@@ -187,30 +187,26 @@ def test_salt_cells_auto_activates_and_is_hash_identical(spark):
         wide, "cluster", ["q1_tgt"], id_vars=["alchemer_id"],
         salt_cells=False,
     )
-    try:
-        # plan evidence: the auto path went through the salted two-phase
-        # aggregation (a _salt grouping appears in the cells lineage)
-        auto_plan = t_auto.cells._jdf.queryExecution().toString()
-        plain_plan = t_plain.cells._jdf.queryExecution().toString()
-        assert "_salt" in auto_plan
-        assert "_salt" not in plain_plan
-        # and the probe itself fires on the planted fixture
-        long = melt(
-            wide.select("cluster", "q1_tgt"),
-            id_vars=["cluster"],
-            value_vars=["q1_tgt"],
-        )
-        assert detect_cell_skew(long, ["variable", "cluster", "value"])
-        # results hash-identical: same cells, same counts, same weights
-        a = {tuple(r) for r in t_auto.cells.collect()}
-        p = {tuple(r) for r in t_plain.cells.collect()}
-        assert a == p and len(a) == 7
-        sa = {tuple(r) for r in t_auto.cluster_sizes.collect()}
-        sp = {tuple(r) for r in t_plain.cluster_sizes.collect()}
-        assert sa == sp
-    finally:
-        t_auto.unpersist()
-        t_plain.unpersist()
+    # plan evidence: the auto path went through the salted two-phase
+    # aggregation (a _salt grouping appears in the cells lineage)
+    auto_plan = t_auto.cells._jdf.queryExecution().toString()
+    plain_plan = t_plain.cells._jdf.queryExecution().toString()
+    assert "_salt" in auto_plan
+    assert "_salt" not in plain_plan
+    # and the probe itself fires on the planted fixture
+    long = melt(
+        wide.select("cluster", "q1_tgt"),
+        id_vars=["cluster"],
+        value_vars=["q1_tgt"],
+    )
+    assert detect_cell_skew(long, ["variable", "cluster", "value"])
+    # results hash-identical: same cells, same counts, same weights
+    a = {tuple(r) for r in t_auto.cells.collect()}
+    p = {tuple(r) for r in t_plain.cells.collect()}
+    assert a == p and len(a) == 7
+    sa = {tuple(r) for r in t_auto.cluster_sizes.collect()}
+    sp = {tuple(r) for r in t_plain.cluster_sizes.collect()}
+    assert sa == sp
 
 
 def test_cramers_v_known_table(spark):
@@ -238,11 +234,11 @@ def test_cramers_v_known_table(spark):
 
 
 def test_posthoc_bonferroni_fallback_wide_table(spark):
-    """Tables wider than the precomputed z-threshold range (m =
-    n_values * n_clusters > 1024) take the in-plan survival-function
-    fallback (``_z_thr`` NULL inside _dense_sig_sql). Pin that branch
-    against the Python chi2_sf on every emitted cell: the labels must
-    be exactly the |z| >= 1.96 AND chi2_sf(z^2, 1) <= alpha/m rule."""
+    """A table wider than 1024 cells (m = n_values * n_clusters), past
+    where a precomputed |z|-threshold table would end, follows the same
+    rule as every other width. Pin it against the Python chi2_sf on
+    every emitted cell: the labels must be exactly the |z| >= 1.96 AND
+    chi2_sf(z^2, 1) <= alpha/m rule."""
     from qudo_etl_pipeline_spark.functions.stats import chi2_sf
     from qudo_etl_pipeline_spark.operators.contingency import (
         contingency_tables,
@@ -252,7 +248,7 @@ def test_posthoc_bonferroni_fallback_wide_table(spark):
     # 8 clusters x 160 values -> m = 1280 > 1024. A planted dependence
     # (every 3rd row answers its own cluster's sentinel value) makes
     # the variable significant with strongly positive cells; the rest
-    # spread uniformly so the fallback sees both sides of the boundary.
+    # spread uniformly so the rule sees both sides of the boundary.
     rows = []
     for i in range(16000):
         c = f"c{i % 8}"
@@ -260,28 +256,25 @@ def test_posthoc_bonferroni_fallback_wide_table(spark):
         rows.append((i, c, v))
     df = spark.createDataFrame(rows, "id bigint, cluster string, q string")
     t = contingency_tables(df, "cluster", id_vars=["id"])
-    try:
-        cells = post_hoc_cells(t, alpha=0.05).collect()
-        assert cells, "wide planted table must be significant"
-        n_vals = len({r["value"] for r in cells})
-        n_cls = len({r["cluster"] for r in cells})
-        m = n_vals * n_cls
-        assert m > 1024, f"test must exercise the fallback (m={m})"
-        labels = {"pos": 0, "neg": 0, "neu": 0}
-        for r in cells:
-            z = r["adj_residual"]
-            if z is None:
-                expect = "neu"
+    cells = post_hoc_cells(t, alpha=0.05).collect()
+    assert cells, "wide planted table must be significant"
+    n_vals = len({r["value"] for r in cells})
+    n_cls = len({r["cluster"] for r in cells})
+    m = n_vals * n_cls
+    assert m > 1024, f"test must use a table wider than 1024 cells (m={m})"
+    labels = {"pos": 0, "neg": 0, "neu": 0}
+    for r in cells:
+        z = r["adj_residual"]
+        if z is None:
+            expect = "neu"
+        else:
+            sig = abs(z) >= 1.96 and chi2_sf(z * z, 1.0) <= 0.05 / m
+            if sig:
+                expect = "pos" if r["observed"] > r["expected"] else "neg"
             else:
-                sig = abs(z) >= 1.96 and chi2_sf(z * z, 1.0) <= 0.05 / m
-                if sig:
-                    expect = "pos" if r["observed"] > r["expected"] else "neg"
-                else:
-                    expect = "neu"
-            assert r["post_hoc"] == expect, (r["value"], r["cluster"], z)
-            labels[r["post_hoc"]] += 1
-        # the planted cells are pos; the boundary rule must also leave
-        # plenty of neutral cells (both branches genuinely exercised)
-        assert labels["pos"] >= 8 and labels["neu"] > 100, labels
-    finally:
-        t.unpersist()
+                expect = "neu"
+        assert r["post_hoc"] == expect, (r["value"], r["cluster"], z)
+        labels[r["post_hoc"]] += 1
+    # the planted cells are pos; the boundary rule must also leave
+    # plenty of neutral cells (both branches genuinely exercised)
+    assert labels["pos"] >= 8 and labels["neu"] > 100, labels

@@ -15,6 +15,8 @@ same seeded tool and hash-comparing one query per class:
 - profiler null_keys metrics  -> join_profile_orders_lineitem
 - encode/sketch NULL-key drop -> label_encode_codes, bloom_filter_custkeys
 - dedup keep-lowest-id        -> semantic_dedup_verdicts
+- contingency NULL clusters / segments / codes -> deliver_stats_weighted,
+  chi2_stat_by_variable, sig_spread_planted
 """
 
 from __future__ import annotations
@@ -37,6 +39,9 @@ QUERIES = [
     "label_encode_codes",
     "bloom_filter_custkeys",
     "semantic_dedup_verdicts",
+    "deliver_stats_weighted",
+    "chi2_stat_by_variable",
+    "sig_spread_planted",
 ]
 
 

@@ -104,8 +104,6 @@ def test_contingency_auto_salting_engages_only_on_skew(spark):
     b = {(r["variable"], r["cluster"], r["value"]): (r["observed"], r["w_observed"])
          for r in t_plain.cells.collect()}
     assert a == b
-    t_auto.unpersist()
-    t_plain.unpersist()
 
     uniform = spark.createDataFrame(
         [("c%d" % (i % 4), "u%d" % (i % 11), "w%d" % (i % 6)) for i in range(2000)],
@@ -114,7 +112,6 @@ def test_contingency_auto_salting_engages_only_on_skew(spark):
     t_uni = contingency_tables(uniform, "cluster", salt_cells="auto")
     uni_plan = t_uni.cells._jdf.queryExecution().analyzed().toString()
     assert "_salt" not in uni_plan  # probe must NOT fire on uniform data
-    t_uni.unpersist()
 
 
 def test_choose_join_strategy_decisions():

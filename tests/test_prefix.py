@@ -161,6 +161,29 @@ def test_nested_scopes_compose(spark):
     assert not P._REGISTRY
 
 
+def test_rearm_stays_with_first_owner(spark):
+    # A cache re-armed after an external unpersist must stay with the
+    # scope that first acquired it: registering it with the re-acquiring
+    # (inner) scope let that scope's exit release a cache the enclosing
+    # scope still depends on.
+    from qudo_etl_pipeline_spark.operators import prefix as P
+
+    P.clear_prefix_caches()
+    df = spark.createDataFrame([(i, 1) for i in range(20)], "k bigint, x bigint")
+    with P.prefix_cache_scope():
+        outer = P.acquire_operator_cache(df)
+        outer.count()
+        outer.unpersist()  # external release, e.g. by another owner
+        with P.prefix_cache_scope():
+            inner = P.acquire_operator_cache(df)
+            assert inner is outer and inner.storageLevel.useMemory
+        assert outer.storageLevel.useMemory
+        assert sum(len(v) for v in P._REGISTRY.values()) == 1
+    # the outer scope, its first owner, still releases it
+    assert not P._REGISTRY
+    assert not outer.storageLevel.useMemory
+
+
 def test_scope_stack_is_thread_local(spark):
     # A scope opened on the main thread must NOT capture acquisitions
     # made by a worker thread (and vice versa) — a shared stack let one

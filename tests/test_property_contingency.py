@@ -47,7 +47,6 @@ def _spark_df(spark, rows):
 def test_chi2_matches_numpy_mirror(spark, rows):
     t = contingency_tables(_spark_df(spark, rows), "cluster")
     out = {r["variable"]: r for r in chi2_by_variable(t).collect()}
-    t.unpersist()
     for var_idx, var in enumerate(["q_x", "q_y"]):
         vals = sorted({r[1 + var_idx] for r in rows})
         cls = sorted({r[0] for r in rows})
@@ -79,7 +78,6 @@ def test_deliver_stats_invariants(spark, rows):
     # alpha=1.0 keeps every variable so the invariants see output even on
     # independent random tables
     d = deliver_stats(t, alpha=1.0).collect()
-    t.unpersist()
     ps = [r["chi_2_result"] for r in d]
     assert ps == sorted(ps)  # globally sorted by p
     for r in d:

@@ -149,7 +149,6 @@ def test_deliver_stats_matches_python_mirror(spark, rows):
     df = spark.createDataFrame(rows, "cluster string, q_x string, q_y string")
     t = contingency_tables(df, "cluster")
     got = deliver_stats(t, alpha=ALPHA).collect()
-    t.unpersist()
     want = {(w["q_code"], w["targeting_seg"]): w for w in _mirror(rows)}
     assert {(r["q_code"], r["targeting_seg"]) for r in got} == set(want)
     for r in got:

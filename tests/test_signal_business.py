@@ -51,14 +51,14 @@ def labeled(spark):
 
 
 def test_uniqueness(spark, deliver):
-    u = B.uniqueness(deliver)
+    u = B.uniqueness(deliver.collect())
     # seg 0: 3 pairs, 1 duplicated -> 1 - 1/3; seg 1: 3 pairs, 1 dup
     assert u["0"] == pytest.approx(1 - 1 / 3)
     assert u["1"] == pytest.approx(1 - 1 / 3)
 
 
 def test_communicability(spark, deliver):
-    c = B.communicability(deliver)
+    c = B.communicability(deliver.collect())
     assert c["data"] == {"0": 1, "1": 1}
     assert c["avg"] == pytest.approx(1.0)
 
@@ -73,7 +73,7 @@ def test_social_presence(spark, labeled):
 
 
 def test_magnitude(spark, deliver, labeled):
-    m = B.magnitude(deliver, labeled, ["q1_tgt", "q2_tgt"])
+    m = B.magnitude(deliver.collect(), labeled, ["q1_tgt", "q2_tgt"])
     # seg 0: 2 sig tgt rows / 2 tgt vars = 1.0 ratio * 0.5 share = 0.5
     # seg 1: 1 sig tgt row  / 2 tgt vars = 0.5 ratio * 0.5 share = 0.25
     assert m["0" if "0" in m else 0] == pytest.approx(0.5)
@@ -91,13 +91,55 @@ def test_message_reach():
 
 def test_sig_variables_and_spread(spark, deliver):
     num_sig, num_sig_tgt, groups, tgt_groups = B.significant_variables_and_spread(
-        deliver
+        deliver.collect()
     )
     assert num_sig == {"0": 3, "1": 2}
     assert num_sig_tgt == {"0": 2, "1": 1}
     # prefix of '1001_tgt_a' is '1001'; 2 occurrences overall, both sig
     assert groups["0"]["1001"] == pytest.approx(0.5)
     assert tgt_groups["0"]["1001"] == pytest.approx(0.5)
+
+
+@pytest.fixture(scope="module")
+def deliver_nulls(spark, deliver):
+    """The hand-built deliver plus NULL-segment and NULL-q_code rows."""
+    rows = [
+        # a NULL segment holding the pair segments 0 and 1 share, one
+        # only it holds, and one segment 0 alone holds
+        ("1001_tgt_a", "yes", 0.003, ["yes"], None),
+        ("2002_only", "no", 0.004, ["no"], None),
+        ("psy_2001_x", "hi", 0.005, ["hi"], None),
+        (None, "x", 0.006, ["x"], "0"),  # NULL q_code in segment 0
+    ]
+    return deliver.unionByName(spark.createDataFrame(rows, deliver.schema))
+
+
+def test_deliver_metrics_null_segment_and_code(spark, deliver_nulls, labeled):
+    rows = deliver_nulls.collect()
+    # a NULL segment is scored but never makes a pair a duplicate:
+    # segment 0's psy_2001_x pair stays unique
+    u = B.uniqueness(rows)
+    assert u["0"] == pytest.approx(1 - 1 / 4)
+    assert u["1"] == pytest.approx(1 - 1 / 3)
+    assert u[None] == pytest.approx(1 - 1 / 3)
+    # NULL q_code never matches; the NULL segment counts in the total
+    c = B.communicability(rows)
+    assert c["data"] == {"0": 1, "1": 1, None: 1}
+    assert c["avg"] == pytest.approx(3 / 3)
+    m = B.magnitude(rows, labeled, ["q1_tgt", "q2_tgt"])
+    assert m["0" if "0" in m else 0] == pytest.approx(0.5)
+    assert m["all_clusters"] == pytest.approx(0.75)
+    num_sig, num_sig_tgt, groups, tgt_groups = B.significant_variables_and_spread(
+        rows
+    )
+    assert num_sig == {"0": 4, "1": 2, None: 3}
+    assert num_sig_tgt == {"0": 2, "1": 1, None: 1}
+    # a None prefix (NULL q_code) is its own group
+    assert groups["0"] == pytest.approx(
+        {"1001": 1 / 3, "1002": 1.0, "psy": 1 / 2, None: 1.0}
+    )
+    assert groups[None] == pytest.approx({"1001": 1 / 3, "2002": 1.0, "psy": 1 / 2})
+    assert tgt_groups[None] == pytest.approx({"1001": 1 / 3})
 
 
 def test_classification_metrics_perfect_and_weighted(spark):
