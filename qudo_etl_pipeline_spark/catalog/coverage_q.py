@@ -503,7 +503,6 @@ def magnitude_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from qudo_etl_pipeline_spark.ml.business import magnitude
 
     o = load_table(spark, sf_dir, "orders")
-    labeled = o.select(F.col("o_orderstatus").alias("prediction"))
     deliver = (
         o.filter(F.col("o_totalprice") > 150000)
         .select(
@@ -513,7 +512,9 @@ def magnitude_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     tgt_cols = [f"prio_{i}_tgt" for i in range(5)]  # 5 priority levels
-    m = magnitude(deliver.collect(), labeled, tgt_cols)
+    # cluster sizes: rows per segment, the NULL segment included
+    sizes = o.groupBy("o_orderstatus").count().collect()
+    m = magnitude(deliver.collect(), {r[0]: r[1] for r in sizes}, tgt_cols)
     rows = [
         (seg, val)
         for seg, val in sorted(m.items(), key=lambda kv: none_last_key(kv[0]))

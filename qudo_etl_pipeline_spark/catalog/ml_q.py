@@ -19,6 +19,7 @@ from qudo_etl_pipeline_spark.functions.rounding import ref_round_sql
 from qudo_etl_pipeline_spark.ml import clustering as C
 from qudo_etl_pipeline_spark.ml import features as FE
 from qudo_etl_pipeline_spark.ml import quality as Q
+from qudo_etl_pipeline_spark.sources.io import local_frame
 
 # shared planted features: 3-d lineitem projection, cluster = l_returnflag
 _LI_FEATS = """
@@ -538,9 +539,10 @@ def kmodes_step_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes = assigned.groupBy(F.col("prediction").alias("cluster")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    mode_rows = spark.createDataFrame(
+    mode_rows = local_frame(
+        spark,
         [(i, m["a0"], m["a1"]) for i, m in enumerate(new_modes)],
-        "cluster: int, mode_a0: string, mode_a1: string",
+        "cluster int, mode_a0 string, mode_a1 string",
     )
     return sizes.join(mode_rows, "cluster")
 

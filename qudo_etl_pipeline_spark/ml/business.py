@@ -18,12 +18,21 @@ Re-implements (reference: src/kraken/app/metrics.py):
 
 `deliver` is the deliver-stats output of operators/contingency.py
 (q_code, targeting_seg, sig_more_category list, chi_2_result,
-pop_mode...) as COLLECTED rows: it is aggregate-sized (significant
-variables x segments, at most |variables| x |clusters| rows), so the
-deliver metrics are plain Python over it and launch no Spark job.
-:func:`get_all_metrics` collects it once for all of them. `labeled` is
-the respondent DataFrame with a `prediction` column; everything over it
-aggregates to segment-cardinality results before collecting.
+pop_mode...) as driver-held rows (``contingency.deliver_rows``): it is
+aggregate-sized (significant variables x segments, at most
+|variables| x |clusters| rows), so the deliver metrics are plain Python
+over it and launch no Spark job.
+
+Social presence and magnitude read their counts from the survey's
+collected contingency cells (``ContingencyTables``): the `mc_`
+column's (cluster, value) cells give the platform counts, and the
+row-marker cells give every cluster's size, a NULL cluster included.
+:func:`get_all_metrics` takes the survey's tables; a
+:func:`social_presence` caller without them gets one cell aggregation
+over the `mc_` columns.
+`labeled` is the respondent DataFrame with a `prediction` column; the
+quality and signal metrics over it aggregate to segment-cardinality
+results before collecting.
 """
 
 from __future__ import annotations
@@ -32,7 +41,11 @@ import re
 from collections import Counter
 
 from pyspark.sql import DataFrame, Row
-from pyspark.sql import functions as F
+
+from qudo_etl_pipeline_spark.operators.contingency import (
+    ContingencyTables,
+    contingency_tables,
+)
 
 
 def _pair_key(row: Row) -> str:
@@ -76,23 +89,13 @@ def communicability(
 
 
 def find_social_column(
-    df: DataFrame, sm_platform: str, marker: str = "mc_"
+    tables: ContingencyTables, sm_platform: str, candidates: list[str]
 ) -> str | None:
-    """Detect the multiple-choice column whose values mention the
-    platform (metrics.py:374-390). One aggregation over candidates."""
-    cands = [c for c in df.columns if marker in c]
-    if not cands:
-        return None
-    row = df.agg(
-        *[
-            F.max(
-                F.lower(F.col(c).cast("string")).contains(sm_platform.lower()).cast("int")
-            ).alias(c)
-            for c in cands
-        ]
-    ).collect()[0]
-    for c in cands:
-        if row[c] == 1:
+    """The first candidate column whose values mention the platform
+    (metrics.py:374-390), read off the collected cells."""
+    needle = sm_platform.lower()
+    for c in candidates:
+        if any(needle in cell.value.lower() for cell in tables.cells_of(c)):
             return c
     return None
 
@@ -102,45 +105,50 @@ def social_presence(
     sm_platform: str,
     pred: str = "prediction",
     marker: str = "mc_",
+    tables: ContingencyTables | None = None,
 ) -> dict | float:
     """M30 (metrics.py:364-404): per-cluster share answering exactly
-    `sm_platform` on the detected column, rounded 3. NaN if no column."""
-    col = find_social_column(labeled, sm_platform, marker)
+    `sm_platform` on the detected column, rounded 3 with Python round
+    (metrics.py:402). NaN if no column.
+
+    Read from ``tables`` (the cells of ``labeled`` by ``pred``) when
+    every `marker` column of ``labeled`` is one of its variables; else
+    one cell aggregation over those columns answers both the detection
+    and the shares. A cluster's share is its platform cell over its row
+    count, so a cluster with no answer on the column scores 0.0, as the
+    reference's ``(col == platform).sum() / len`` does."""
+    cands = [c for c in labeled.columns if marker in c]
+    if not cands:
+        return float("nan")
+    if tables is None or not set(cands) <= set(tables.variables):
+        tables = contingency_tables(labeled, pred, variables=cands)
+    col = find_social_column(tables, sm_platform, cands)
     if col is None:
         return float("nan")
-    from qudo_etl_pipeline_spark.functions.rounding import ref_round
-
-    # ref_round: the reference rounds with Python round (metrics.py:402)
-    rows = (
-        labeled.groupBy(pred)
-        .agg(
-            ref_round(
-                F.sum((F.col(col) == sm_platform).cast("int"))
-                / F.count(F.lit(1)),
-                3,
-            ).alias("share")
-        )
-        .collect()
-    )
-    return {r[pred]: r["share"] for r in rows}
+    hits = {
+        c.cluster: c.observed
+        for c in tables.cells_of(col)
+        if c.value == sm_platform
+    }
+    return {k: round(hits.get(k, 0) / n, 3) for k, n in tables.cluster_n.items()}
 
 
 def magnitude(
     deliver: list[Row],
-    labeled: DataFrame,
+    cluster_n: dict,
     tgt_cols: list[str],
-    pred: str = "prediction",
     seg_col: str = "targeting_seg",
 ) -> dict | float:
     """M31 (metrics.py:636-687): magnitude = cluster share (round 2) x
     (significant `_tgt` rows per segment / #tgt variables), round 3;
-    plus 'all_clusters' total; NaN if total is 0 or > 1."""
+    plus 'all_clusters' total; NaN if total is 0 or > 1. ``cluster_n``
+    is {cluster: rows}, a NULL cluster included
+    (:attr:`ContingencyTables.cluster_n`)."""
     num_tgt = len(tgt_cols)
     if num_tgt == 0:
         return float("nan")
-    sizes = labeled.groupBy(pred).agg(F.count(F.lit(1)).alias("n")).collect()
-    total = sum(r["n"] for r in sizes)
-    pct = {r[pred]: round(r["n"] / total, 2) for r in sizes}
+    total = sum(cluster_n.values())
+    pct = {k: round(n / total, 2) for k, n in cluster_n.items()}
     sig_counts = Counter(
         r[seg_col]
         for r in deliver
@@ -223,7 +231,8 @@ def significant_variables_and_spread(
 
 def get_all_metrics(
     labeled: DataFrame,
-    deliver: DataFrame | None = None,
+    tables: ContingencyTables,
+    deliver: list[Row] | None = None,
     features_col: str = "features",
     pred: str = "prediction",
     tgt_cols: list[str] | None = None,
@@ -232,26 +241,37 @@ def get_all_metrics(
     refit=None,
     with_random_baseline: bool = True,
     social_df: DataFrame | None = None,
+    feature_dim: int | None = None,
 ) -> dict:
     """M37 (metrics.py:814-911): compose quality + consistency +
     business metrics into one dict. `refit` (optional) is the
-    train->scorer callable used by the consistency checks.
+    train->scorer callable used by the consistency checks. ``tables``:
+    the contingency tables of ``social_df`` by ``pred``; the magnitude's
+    cluster sizes and, when its `mc_` columns are variables, social
+    presence read their cells.
 
+    ``deliver``: the deliver-stats rows
+    (:func:`~qudo_etl_pipeline_spark.operators.contingency.deliver_rows`).
     ``social_df``: frame with the ORIGINAL (unencoded) answers plus the
     prediction column, for social presence — the reference passes
     full_data separately from data_encoded (metrics.py:840) because
     'facebook' matching cannot work on label codes. Defaults to
-    ``labeled`` for callers that kept string answers."""
+    ``labeled`` for callers that kept string answers. ``feature_dim``:
+    the width of ``features_col``, when the caller knows it (saves
+    cluster_quality's probe)."""
     from qudo_etl_pipeline_spark.ml import quality as Q
     from qudo_etl_pipeline_spark.ml import signal as S
 
-    metrics = Q.cluster_quality(labeled, features=features_col, pred=pred, n_seed=n_seed)
+    social_df = labeled if social_df is None else social_df
+    metrics = Q.cluster_quality(
+        labeled, features=features_col, pred=pred, n_seed=n_seed, dim=feature_dim
+    )
     if with_random_baseline:
         metrics = Q.random_checker(
             labeled, features=features_col, pred=pred, cluster_metrics=metrics
         )
     metrics["fb_presence"] = social_presence(
-        social_df if social_df is not None else labeled, sm_platform, pred=pred
+        social_df, sm_platform, pred=pred, tables=tables
     )
     if refit is not None:
         metrics["model_consistency"] = S.model_consistency(labeled, refit, label_col=pred)
@@ -260,13 +280,12 @@ def get_all_metrics(
         metrics["model_consistency"] = float("nan")
         metrics["label_consistency"] = float("nan")
     if deliver is not None:
-        deliver = deliver.collect()
         metrics["uniqueness"] = uniqueness(deliver)
         comm = communicability(deliver)
         metrics["communicability_clusters"] = comm["data"]
         metrics["communicability_avg"] = comm["avg"]
         if tgt_cols:
-            metrics["magnitude"] = magnitude(deliver, labeled, tgt_cols, pred=pred)
+            metrics["magnitude"] = magnitude(deliver, tables.cluster_n, tgt_cols)
             sig = S.signal_loss(labeled, tgt_cols, target_col=pred)
             metrics["signal_loss"] = sig
             metrics["message_reach"] = message_reach(

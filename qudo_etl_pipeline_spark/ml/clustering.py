@@ -374,11 +374,21 @@ def gmm_multi_seed(
 
 
 def rules_based(
-    df: DataFrame, rules_col: str, pred: str = PREDICTION
+    df: DataFrame,
+    rules_col: str,
+    pred: str = PREDICTION,
+    code_map: dict[str, int] | None = None,
 ) -> DataFrame:
     """Rules-based segmentation: labels = sorted-value codes of one
-    answer column (clustering.py:1037-1077, M9)."""
-    out = label_encode(df, [rules_col], suffix="__code")
+    answer column (clustering.py:1037-1077, M9). ``code_map``: the
+    column's codes when a value census already holds them; otherwise
+    they are built here (one pass)."""
+    out = label_encode(
+        df,
+        [rules_col],
+        code_maps=None if code_map is None else {rules_col: code_map},
+        suffix="__code",
+    )
     return out.withColumn(pred, F.col(rules_col + "__code")).drop(
         rules_col + "__code"
     )

@@ -4,8 +4,8 @@ Re-implements the reference's feature prep (reference:
 src/kraken/app/clustering.py:101-109,207-291) Spark-first:
 
 - dynamic typing: ``data.apply(pd.to_numeric, errors='ignore')``
-  (clustering.py:101) -> one try-cast null-rate pass over every string
-  column (SURVEY §1.3).
+  (clustering.py:101) -> read off the value census: a string column is
+  numeric iff every distinct value try-casts to double (SURVEY §1.3).
 - whole-table label encode: ``data.apply(LabelEncoder().fit_transform)``
   (clustering.py:103-109) -> sorted-distinct-value codes per column.
   sklearn sorts values (numerics numerically, strings lexicographically),
@@ -18,9 +18,11 @@ src/kraken/app/clustering.py:101-109,207-291) Spark-first:
 
 Scale notes (100 TB design):
 - Code maps are built in ONE melt + groupBy pass over the table; the
-  per-column dictionaries (answer options — tiny) are collected and
-  re-applied as broadcast `F.create_map` literals, so ENCODING ADDS NO
-  SHUFFLE to the downstream plan and survives Catalyst pushdown.
+  (column, value, rows) census it collects also types the columns and
+  bounds the survey's cell skew. The per-column dictionaries (answer
+  options — tiny) are re-applied as broadcast `F.create_map` literals,
+  so ENCODING ADDS NO SHUFFLE to the downstream plan and survives
+  Catalyst pushdown.
 - Scaling statistics are a single agg; the transform is pure column
   arithmetic (whole-stage codegen).
 - PCA runs on MLlib vectors (distributed covariance/SVD), k<=#features.
@@ -35,47 +37,45 @@ from pyspark.sql import types as T
 from qudo_etl_pipeline_spark.plans.melt import melt
 
 
-def sniff_numeric_columns(df: DataFrame, candidates: list[str] | None = None) -> list[str]:
-    """Columns that are numeric or fully castable to double (P10).
+class ValueCensus(dict):
+    """The value census of a set of columns, taken in one pass.
 
-    A string column counts as numeric iff casting adds no nulls
-    (pd.to_numeric errors='ignore' semantics: all-or-nothing per column).
-    One aggregation pass for all candidates.
+    The dict itself maps column -> {value: code}, the sorted-value
+    LabelEncoder codes. ``counts`` maps column -> {value: rows}, NULL
+    (key None) included, so every column's counts sum to the row count.
+    ``all_numeric`` lists the numeric columns as the reference's
+    ``pd.to_numeric(errors='ignore')`` typing sees them: schema-numeric
+    columns first, then, in schema order, the string columns whose every
+    non-null value casts to double.
     """
-    numeric = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, T.NumericType)
-        and (candidates is None or f.name in candidates)
-    ]
-    strings = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, T.StringType)
-        and (candidates is None or f.name in candidates)
-    ]
-    if not strings:
-        return numeric
-    aggs = [
-        F.sum(
-            F.when(
-                F.col(c).isNotNull() & F.col(c).try_cast("double").isNull(), 1
-            ).otherwise(0)
-        ).alias(c)
-        for c in strings
-    ]
-    row = df.agg(*aggs).collect()[0]
-    return numeric + [c for c in strings if row[c] == 0]
+
+    def __init__(self, code_maps: dict, counts: dict, all_numeric: list[str]):
+        super().__init__(code_maps)
+        self.counts = counts
+        self.all_numeric = all_numeric
 
 
-def build_code_maps(
-    df: DataFrame, cols: list[str]
-) -> dict[str, dict[str, int]]:
+def sniff_numeric_columns(df: DataFrame, candidates: list[str] | None = None) -> list[str]:
+    """Columns that are numeric or fully castable to double (P10): the
+    schema-numeric candidates, then the ``all_numeric`` strings of the
+    string candidates' value census."""
+    fields = [
+        f for f in df.schema.fields if candidates is None or f.name in candidates
+    ]
+    strings = [f.name for f in fields if isinstance(f.dataType, T.StringType)]
+    return [
+        f.name for f in fields if isinstance(f.dataType, T.NumericType)
+    ] + (build_code_maps(df, strings).all_numeric if strings else [])
+
+
+def build_code_maps(df: DataFrame, cols: list[str]) -> ValueCensus:
     """Sorted-distinct-value integer codes per column, in ONE pass.
 
     Mirrors per-column ``LabelEncoder().fit_transform``
     (clustering.py:103): codes follow sorted value order. Columns whose
     every value casts to double sort numerically; others sort as strings.
+    The (column, value, rows) table this collects is kept as the
+    survey's value census (:class:`ValueCensus`).
     """
     long = melt(df.select(cols), id_vars=[], value_vars=cols)
     dist = (
@@ -84,21 +84,31 @@ def build_code_maps(
         .withColumn("_num", F.col("value").try_cast("double"))
         .collect()
     )
+    counts: dict[str, dict] = {c: {} for c in cols}
     by_col: dict[str, list] = {c: [] for c in cols}
-    all_numeric: dict[str, bool] = {c: True for c in cols}
+    is_num: dict[str, bool] = {c: True for c in cols}
     for r in dist:
+        counts[r["variable"]][r["value"]] = r["_n"]
         by_col[r["variable"]].append((r["value"], r["_num"]))
         if r["value"] is not None and r["_num"] is None:
-            all_numeric[r["variable"]] = False
+            is_num[r["variable"]] = False
     maps: dict[str, dict[str, int]] = {}
     for c in cols:
         vals = [(v, n) for v, n in by_col[c] if v is not None]
-        if all_numeric[c]:
+        if is_num[c]:
             vals.sort(key=lambda t: t[1])
         else:
             vals.sort(key=lambda t: str(t[0]))
         maps[c] = {v: i for i, (v, _) in enumerate(vals)}
-    return maps
+    fields = [f for f in df.schema.fields if f.name in counts]
+    all_numeric = [
+        f.name for f in fields if isinstance(f.dataType, T.NumericType)
+    ] + [
+        f.name
+        for f in fields
+        if isinstance(f.dataType, T.StringType) and is_num[f.name]
+    ]
+    return ValueCensus(maps, counts, all_numeric)
 
 
 def label_encode(
@@ -109,25 +119,24 @@ def label_encode(
 ) -> DataFrame:
     """Apply code maps as broadcast literal lookups (no shuffle, M1).
 
-    Encoded columns are int; unmapped/null values encode to null.
+    Encoded columns are int; unmapped/null values encode to null. All
+    of them are added in one projection.
     """
     if cols is None:
         cols = [c for c in df.columns]
     if code_maps is None:
         code_maps = build_code_maps(df, cols)
-    out = df
+    encoded = {}
     for c in cols:
         entries = []
         for v, i in code_maps[c].items():
             entries += [F.lit(v), F.lit(i)]
-        if entries:
-            mapping = F.create_map(*entries)
-            out = out.withColumn(
-                c + suffix, mapping[F.col(c).cast("string")].cast("int")
-            )
-        else:
-            out = out.withColumn(c + suffix, F.lit(None).cast("int"))
-    return out
+        encoded[c + suffix] = (
+            F.create_map(*entries)[F.col(c).cast("string")].cast("int")
+            if entries
+            else F.lit(None).cast("int")
+        )
+    return df.withColumns(encoded)
 
 
 def standardize(

@@ -84,7 +84,10 @@ def _feature_dim(df: DataFrame, features: str) -> int:
 
 
 def cluster_stats(
-    df: DataFrame, features: str = FEATURES, pred: str = PREDICTION
+    df: DataFrame,
+    features: str = FEATURES,
+    pred: str = PREDICTION,
+    dim: int | None = None,
 ) -> DataFrame:
     """One-pass per-cluster sufficient statistics.
 
@@ -92,8 +95,9 @@ def cluster_stats(
     norms). Within-cluster squared dispersion follows as
     ``ssn - n * ||centroid||^2`` — no second scan needed.
 
-    The dimension is probed once (limit-1 scan) so the aggregation is
-    plain per-dimension column arithmetic: ``avg(features[d])`` stays
+    The dimension ``dim`` comes from the caller, or is probed once
+    (limit-1 scan), so the aggregation is plain per-dimension column
+    arithmetic: ``avg(features[d])`` stays
     inside whole-stage codegen, where the previous Summarizer-on-vector +
     interpreted higher-order ``aggregate`` lambdas did not (~2x on a
     600k-row pass).
@@ -103,7 +107,8 @@ def cluster_stats(
     so). A ragged row indexes out of bounds, which ANSI mode turns into
     a loud error rather than a silently skewed centroid.
     """
-    dim = _feature_dim(df, features)
+    if dim is None:
+        dim = _feature_dim(df, features)
     f = F.col(features).cast("array<double>")
     sq_norm = sum((f[d] * f[d] for d in range(1, dim)), f[0] * f[0])
     return (
@@ -129,9 +134,11 @@ def calinski_harabasz(
     return _calinski_harabasz_from(_stats_or_none(df, features, pred))
 
 
-def _stats_or_none(df: DataFrame, features: str, pred: str) -> list | None:
+def _stats_or_none(
+    df: DataFrame, features: str, pred: str, dim: int | None = None
+) -> list | None:
     try:
-        return cluster_stats(df, features, pred).collect()
+        return cluster_stats(df, features, pred, dim).collect()
     except ValueError:  # empty input / empty feature arrays
         return None
 
@@ -479,24 +486,32 @@ def cluster_quality(
     n_seed=None,
     exact_silhouette: bool = False,
     id_col: str = "row_id",
+    dim: int | None = None,
 ) -> dict:
     """get_cluster_metrics equivalent (metrics.py:42-124): silhouette /
     davies_bouldin / calinski_harabasz / proportions with the reference's
     exact fallback values.
 
-    The labeled frame is cached and ONE cluster_stats pass feeds
-    sizes + proportions + CH and DB's centroid side — without the
+    The labeled frame is cached (unless the caller cached it) and ONE
+    cluster_stats pass feeds sizes + proportions + CH and DB's centroid
+    side — without the
     sharing, each metric re-executed the upstream model.transform +
     scan plus its own stats pass (the dominant cost when callers like
     optimal_k / kmeans_multi_seed evaluate many fits). Three actions
-    total: stats, the silhouette pass, DB's scatter pass."""
+    total: stats, the silhouette pass, DB's scatter pass; a caller that
+    knows the feature width passes it as ``dim`` and saves the probe."""
     # a NULL prediction is "unassigned" — it is a member of no cluster,
     # so it contributes to no quality metric (same contract as
     # davies_bouldin's NULL-centroid exclusion; None cluster keys would
-    # crash the sorted() below). NULL-free inputs are untouched.
-    df = df.filter(F.col(pred).isNotNull()).cache()
+    # crash the sorted() below). NULL-free inputs are untouched. An
+    # input the caller already cached is filtered from its cache, not
+    # cached a second time.
+    owned = not df.is_cached
+    df = df.filter(F.col(pred).isNotNull())
+    if owned:
+        df = df.cache()
     try:
-        stats = _stats_or_none(df, features, pred)
+        stats = _stats_or_none(df, features, pred, dim)
         sizes = (
             [] if stats is None else sorted(stats, key=lambda r: r["cluster"])
         )
@@ -522,7 +537,8 @@ def cluster_quality(
             },
         }
     finally:
-        df.unpersist()
+        if owned:
+            df.unpersist()
 
 
 def random_checker(

@@ -12,8 +12,11 @@ the finalize step — dense grids, expected counts, the chi-squared test,
 post-hoc residuals and deliver rows — runs on the driver in plain
 Python, the same small-crosstab arithmetic the reference runs with
 ``chi2_contingency`` and ``round`` (chisquared_tester.py:331-379). The
-results come back as ``createDataFrame`` frames, so sinks and
-downstream Spark consumers keep their DataFrame interface.
+per-cluster modes and the survey's business metrics read the same
+collected cells. The results come back as Arrow-backed local frames
+(``sources.io.local_frame``, a ``LocalTableScan``), so sinks and
+downstream Spark consumers keep their DataFrame interface and no action
+over them starts a Python worker.
 
 Scale notes (100 TB design):
 - The only full-data shuffle is the cell aggregation, with map-side
@@ -23,6 +26,9 @@ Scale notes (100 TB design):
   |variables| x |values| x |clusters| rows (a few hundred for a
   30-question survey), independent of row count. The finalize step is
   linear in it.
+- Whether the cell aggregation needs salting can be read off the
+  survey's value census, with no sampled probe
+  (:func:`hot_cell_possible`).
 
 Semantics replicated from the reference (file:line cites):
 - "Not shown" rows excluded from crosstabs        (chisquared_tester.py:229-236)
@@ -44,14 +50,17 @@ from dataclasses import dataclass
 from functools import cached_property
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from qudo_etl_pipeline_spark.functions.stats import chi2_sf
 from qudo_etl_pipeline_spark.plans.melt import melt
+from qudo_etl_pipeline_spark.sources.io import local_frame
 
 NOT_SHOWN = "Not shown"
 NOT_SELECTED = "not selected"
+# a cell holding this share of the aggregation's rows is salted
+HOT_SHARE = 0.3
 
 
 def _round(x: float, ndigits: int) -> float:
@@ -158,6 +167,12 @@ def _crosstab(variable: str, cells: list[_Cell]) -> _Crosstab | None:
     )
 
 
+class _Collected(NamedTuple):
+    cells: dict[str, list[_Cell]]  # per variable, sorted by value
+    sizes: dict  # {cluster: (cluster_n, cluster_w, targeting_seg)}
+    total: int  # input rows, NULL-cluster rows included
+
+
 @dataclass
 class ContingencyTables:
     """Aggregated crosstab state shared by every downstream statistic.
@@ -167,6 +182,7 @@ class ContingencyTables:
                  sentinel values (callers filter as needed).
     ``cluster_sizes`` — one row per cluster: ``cluster_n`` rows,
                  ``cluster_w`` total weight.
+    ``variables`` — the aggregated columns, in the caller's order.
 
     Both are lazy views of ONE aggregation, so construction launches no
     job. The first statistic computed from the tables collects that
@@ -177,14 +193,13 @@ class ContingencyTables:
     cells: DataFrame
     cluster_sizes: DataFrame
     cluster_col: str
+    variables: list[str]
     weighted: bool
     _all_cells: DataFrame
     _row_marker: str
 
     @cached_property
-    def _collected(self) -> tuple[list[_Crosstab], dict, float]:
-        """(crosstabs sorted by variable, {cluster: (cluster_n,
-        cluster_w, targeting_seg)}, total input rows)."""
+    def _collected(self) -> _Collected:
         cc = self.cluster_col
         rows = self._all_cells.select(
             "variable",
@@ -206,24 +221,44 @@ class ContingencyTables:
                 by_var.setdefault(r.variable, []).append(
                     _Cell(r.value, r.cluster, r.seg, r.observed, r.w_observed)
                 )
-        tabs = [
-            _crosstab(v, sorted(by_var[v], key=lambda c: c.value))
-            for v in sorted(by_var)
-        ]
-        return [t for t in tabs if t is not None], sizes, float(total)
+        for cells in by_var.values():
+            cells.sort(key=lambda c: c.value)
+        return _Collected(by_var, sizes, total)
+
+    @cached_property
+    def _tabs(self) -> list[_Crosstab]:
+        """The crosstabs, sorted by variable."""
+        cells = self._collected.cells
+        tabs = [_crosstab(v, cells[v]) for v in sorted(cells)]
+        return [t for t in tabs if t is not None]
+
+    def cells_of(self, variable: str) -> list[_Cell]:
+        """The collected (value, cluster) cells of one variable, NULL
+        answers excluded, sorted by value; empty for a column that is
+        not a variable."""
+        return self._collected.cells.get(variable, [])
+
+    @property
+    def cluster_n(self) -> dict:
+        """{cluster: rows} for every cluster with rows, the NULL
+        cluster included (its size is the total less the others')."""
+        _, sizes, total = self._collected
+        out = {k: n for k, (n, _, _) in sizes.items()}
+        if total > sum(out.values()):
+            out[None] = total - sum(out.values())
+        return out
 
     def _frame(self, rows: list, schema: str) -> DataFrame:
         # one partition: the table is driver-sized, and a sink written
         # from it stays one file
-        spark = self.cells.sparkSession
-        return spark.createDataFrame(rows, schema).coalesce(1)
+        return local_frame(self.cells.sparkSession, rows, schema).coalesce(1)
 
 
 def detect_cell_skew(
     long: DataFrame,
     keys: list[str],
     sample_frac: float = 0.05,
-    hot_share: float = 0.3,
+    hot_share: float = HOT_SHARE,
     seed: int = 7,
 ) -> bool:
     """Sampled probe: does one cell key hold >= ``hot_share`` of rows?
@@ -246,6 +281,24 @@ def detect_cell_skew(
     return top["mx"] / top["tot"] >= hot_share
 
 
+def hot_cell_possible(value_counts: dict[str, dict]) -> bool:
+    """Can one cell of the aggregation over these columns hold
+    ``HOT_SHARE`` of its rows? ``value_counts`` is the value census of
+    the aggregated columns: {column: {value (None = NULL): rows}}.
+
+    Exact and job-free: no cell holds more than the n input rows (a
+    value's count or a cluster's row markers), and the aggregation's
+    input is the n row markers plus every non-null answer. So a hot
+    cell is possible only while the answers number under ~2.3 n: with
+    answers filled in, a scheme of at most 2 columns.
+    """
+    n = sum(next(iter(value_counts.values()), {}).values())
+    answered = sum(
+        m for c in value_counts.values() for v, m in c.items() if v is not None
+    )
+    return n >= HOT_SHARE * (n + answered)
+
+
 def contingency_tables(
     wide: DataFrame,
     cluster_col: str,
@@ -254,6 +307,7 @@ def contingency_tables(
     id_vars: list[str] | None = None,
     salt_cells: bool | str = False,
     n_salts: int = 8,
+    value_counts: dict[str, dict] | None = None,
 ) -> ContingencyTables:
     """Melt ``wide`` and aggregate every crosstab cell in one shuffle.
 
@@ -261,10 +315,13 @@ def contingency_tables(
     aggregation — map-side partial aggregation already bounds per-key
     reduce input by the task count, which covers ordinary hot keys.
     True forces the two-phase salted aggregation (plans/skew.py) for
-    inputs known to concentrate on single cells; ``"auto"`` runs
-    :func:`detect_cell_skew` (ONE sampled job at build time — only this
-    mode gives up the construction-launches-no-job property) and salts
-    iff the probe fires.
+    inputs known to concentrate on single cells; ``"auto"`` salts iff a
+    cell holds ``HOT_SHARE`` of the rows: when ``value_counts`` (the
+    value census of ``wide``'s variables, as ``features.build_code_maps``
+    takes it) proves no cell can (:func:`hot_cell_possible`), nothing is
+    salted and no job runs; otherwise :func:`detect_cell_skew` decides
+    (ONE sampled job at build time — only then does construction launch
+    a job).
     """
     if variables is None:
         excluded = {cluster_col, weight_col, *(id_vars or [])}
@@ -301,7 +358,10 @@ def contingency_tables(
     keys = ["variable", cluster_col, "value"]
     nn = long.filter(F.col("value").isNotNull()).withColumn("_w", w)
     if salt_cells == "auto":
-        salt_cells = detect_cell_skew(nn, keys)
+        salt_cells = (
+            value_counts is None
+            or hot_cell_possible({v: value_counts[v] for v in variables})
+        ) and detect_cell_skew(nn, keys)
     if salt_cells:
         from qudo_etl_pipeline_spark.plans.skew import salted_aggregate
 
@@ -331,6 +391,7 @@ def contingency_tables(
         cells=cells,
         cluster_sizes=cluster_sizes,
         cluster_col=cluster_col,
+        variables=variables,
         weighted=weight_col is not None,
         _all_cells=all_cells,
         _row_marker=row_marker,
@@ -388,12 +449,11 @@ def chi2_by_variable(tables: ContingencyTables) -> DataFrame:
     p_value — one row per variable with at least one crosstab cell,
     ordered by variable. ``chi2_stat`` is NULL where dof == 0.
     """
-    tabs, _, _ = tables._collected
     return tables._frame(
         [
             (t.variable, t.chi2_stat, t.dof, t.yates, len(t.values),
              len(t.clusters), t.p_value)
-            for t in tabs
+            for t in tables._tabs
         ],
         "variable string, chi2_stat double, dof bigint not null,"
         " yates boolean, n_values bigint not null,"
@@ -409,7 +469,6 @@ def post_hoc_cells(tables: ContingencyTables, alpha: float = 0.05) -> DataFrame:
     reference does before squaring — chisquared_tester.py:475) and
     ``post_hoc`` in {'pos','neg','neu'}.
     """
-    tabs, _, _ = tables._collected
     cc = tables.cluster_col
     ctype = tables.cells.schema[cc].dataType.simpleString()
     cc_ddl = cc.replace("`", "``")
@@ -417,7 +476,7 @@ def post_hoc_cells(tables: ContingencyTables, alpha: float = 0.05) -> DataFrame:
         [
             (t.variable, d.cluster, d.value, d.observed, d.w_observed,
              d.expected, d.adj_residual, label, t.p_value, t.chi2_stat)
-            for t in tabs
+            for t in tables._tabs
             if t.p_value <= alpha
             for d, label in zip(t.dense, t.post_hoc(alpha))
         ],
@@ -432,6 +491,28 @@ def _pct(part: float, whole: float, ndigits: int) -> float | None:
     """Rounded percentage; None (the reference's NaN) on a zero whole —
     a cluster whose weights are all NULL has zero weighted size."""
     return _round(part / whole * 100, ndigits) if whole else None
+
+
+def _deliver_columns(tables: ContingencyTables, include_chi2_stat: bool):
+    cols = [
+        ("q_code", "string"),
+        ("pop_mode", "string"),
+        ("response_rate", "double"),
+        ("mode_pop_perc", "double"),
+        ("chi_2_result", "double"),
+        ("sig_more_category", "array<string> not null"),
+        ("category_percentages", "array<double> not null"),
+        ("targeting_seg", "string"),
+    ]
+    if include_chi2_stat:
+        cols.append(("chi2_stat", "double"))
+    if tables.weighted:
+        cols += [
+            ("weighted_pop_mode", "string"),
+            ("weighted_pop_mode_perc", "double"),
+            ("weighted_category_percentages", "array<double> not null"),
+        ]
+    return cols
 
 
 def deliver_stats(
@@ -455,9 +536,26 @@ def deliver_stats(
     of the weighted count (the documented intent: "the category with the
     highest weighted sum").
     """
-    tabs, sizes, total_rows = tables._collected
+    return tables._frame(
+        deliver_rows(tables, alpha, include_chi2_stat),
+        ", ".join(
+            f"{name} {ddl}"
+            for name, ddl in _deliver_columns(tables, include_chi2_stat)
+        ),
+    )
+
+
+def deliver_rows(
+    tables: ContingencyTables,
+    alpha: float = 0.05,
+    include_chi2_stat: bool = True,
+) -> list[Row]:
+    """The rows of :func:`deliver_stats`, for the deliver metrics
+    (ml/business.py). Plain Python over the collected cells, so a
+    second call costs no Spark work."""
+    _, sizes, total_rows = tables._collected
     rows = []
-    for t in tabs:
+    for t in tables._tabs:
         if t.p_value > alpha:
             continue
         labels = t.post_hoc(alpha)
@@ -506,84 +604,48 @@ def deliver_stats(
                     _pct(wmode.w_observed, size_w, 0),
                     [_pct(d.w_observed, answered_w, 2) for d in pos],
                 ]
-            rows.append(tuple(row))
+            rows.append(row)
     rows.sort(key=lambda r: (r[4], r[0], r[7]))
-    schema = (
-        "q_code string, pop_mode string, response_rate double,"
-        " mode_pop_perc double, chi_2_result double,"
-        " sig_more_category array<string> not null,"
-        " category_percentages array<double> not null, targeting_seg string"
-    )
-    if include_chi2_stat:
-        schema += ", chi2_stat double"
-    if tables.weighted:
-        schema += (
-            ", weighted_pop_mode string, weighted_pop_mode_perc double,"
-            " weighted_category_percentages array<double> not null"
-        )
-    return tables._frame(rows, schema)
+    make = Row(*(name for name, _ in _deliver_columns(tables, include_chi2_stat)))
+    return [make(*r) for r in rows]
 
 
-def cluster_mode_list(
-    wide: DataFrame,
-    cluster_col: str,
-    variables: list[str] | None = None,
-    id_vars: list[str] | None = None,
-) -> DataFrame:
-    """Per-cluster modal answer for every column — the third element of
-    the reference's ``return_API_data`` triple (M26).
+def cluster_mode_list(tables: ContingencyTables) -> DataFrame:
+    """Per-cluster modal answer for every variable — the third element
+    of the reference's ``return_API_data`` triple (M26).
 
     Reference: chisquared_tester.py:1788-1792 — for each cluster group,
     ``sub_frame.mode(dropna=False).head(1)``: per column the most
     frequent value, with nulls counted as a value, ties broken by the
     ascending sort pandas.mode applies (nulls last). The group sub-frame
     includes the cluster column itself, so its (trivial) mode row is kept
-    for output-shape parity.
+    for output-shape parity. pandas groupby drops NaN group keys, so a
+    NULL cluster has no modes.
 
-    One melt + ONE full-data shuffle; output cardinality is
-    |columns| x |clusters| — independent of row count, same scale story
-    as the deliver-stats cell table. Output: cluster (string), variable,
-    mode_value.
+    Read from the collected cells, with no Spark work of its own: the
+    cells drop NULL values, so a variable's NULL count in a cluster is
+    ``cluster_n`` less its observed cells there. Output: cluster
+    (string), variable, mode_value.
     """
-    if variables is None:
-        variables = [c for c in wide.columns if c not in set(id_vars or [])]
-    elif cluster_col not in variables:
-        variables = [*variables, cluster_col]
-    # pandas groupby drops NaN GROUP KEYS (while mode(dropna=False) keeps
-    # null VALUES) — filter null clusters up front so a caller passing
-    # unlabeled rows matches the reference's self.data.groupby(cluster_col)
-    # (chisquared_tester.py:1789; round-3 ADVICE).
-    wide = wide.filter(F.col(cluster_col).isNotNull())
-    long = melt(
-        wide.select(cluster_col, *[c for c in variables if c != cluster_col]),
-        id_vars=[cluster_col],
-        value_vars=None,
-    ).unionByName(
-        # the cluster column's own melt row (cluster, 'cluster_col', cluster)
-        wide.select(
-            F.col(cluster_col),
-            F.lit(cluster_col).alias("variable"),
-            F.col(cluster_col).cast("string").alias("value"),
-        )
-    )
-    counts = long.groupBy(cluster_col, "variable", "value").agg(
-        F.count(F.lit(1)).alias("n")  # count(lit(1)) keeps null-value rows
-    )
-    # argmax as min-over-struct: (-count, nulls-last, value) reproduces
-    # pandas mode(dropna=False) tie order without a window
-    pick = counts.groupBy(cluster_col, "variable").agg(
-        F.min(
-            F.struct(
-                (-F.col("n")).alias("neg_n"),
-                F.col("value").isNull().cast("int").alias("null_last"),
-                F.col("value").alias("v"),
+    cells, sizes, _ = tables._collected
+    counts: dict = {}
+    for v, vcells in cells.items():
+        for c in vcells:
+            counts.setdefault((v, c.cluster), []).append((c.observed, c.value))
+    rows = []
+    for k, (n, _, seg) in sorted(sizes.items(), key=lambda kv: kv[1][2]):
+        for v in tables.variables:
+            seen = counts.get((v, k), [])
+            nulls = n - sum(o for o, _ in seen)
+            # (-count, nulls last, value): pandas mode(dropna=False) order
+            best = min(
+                seen + ([(nulls, None)] if nulls else []),
+                key=lambda t: (-t[0], t[1] is None, t[1] or ""),
             )
-        ).alias("_m")
-    )
-    return pick.select(
-        F.col(cluster_col).cast("string").alias("cluster"),
-        "variable",
-        F.col("_m.v").alias("mode_value"),
+            rows.append((seg, v, best[1]))
+        rows.append((seg, tables.cluster_col, seg))
+    return tables._frame(
+        rows, "cluster string, variable string not null, mode_value string"
     )
 
 
@@ -625,9 +687,8 @@ def cramers_v(tables: ContingencyTables) -> DataFrame:
     V is derived from the statistic rounded to 6, mirroring the chi2
     query's rounding so the oracle derives from the identical value.
     """
-    tabs, _, _ = tables._collected
     rows = []
-    for t in tabs:
+    for t in tables._tabs:
         k = float(min(len(t.values), len(t.clusters)) - 1)
         stat6 = None if t.chi2_stat is None else _round(t.chi2_stat, 6)
         v = _round(math.sqrt(stat6 / (float(t.n) * k)), 6) if k > 0 else None

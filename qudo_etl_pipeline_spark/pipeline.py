@@ -19,9 +19,10 @@ clustering.py:1079-1187, SegmentationConfig.py:4-18):
    reference's pickles                        (main.py:160-182; SURVEY S5-S7)
 
 The reference forks joblib child processes per family and re-pickles
-the table into each (clustering.py:1085-1088); here the cleaned encoded
-table is cached ONCE on the executors and families run as concurrent
-MLlib jobs from driver threads — no data movement between stages.
+the table into each (clustering.py:1085-1088); here the cleaned table
+is cached ONCE on the executors (the label encoding is a narrow
+projection over it) and families run as concurrent MLlib jobs from
+driver threads — no data movement between stages.
 """
 
 from __future__ import annotations
@@ -45,6 +46,7 @@ from qudo_etl_pipeline_spark.sources import io as IO
 from qudo_etl_pipeline_spark.operators.contingency import (
     cluster_mode_list,
     contingency_tables,
+    deliver_rows,
     deliver_stats,
     discover_stats,
 )
@@ -79,11 +81,16 @@ class SegmentationConfig:
     n_buckets: int = 32
     capture_plans: bool = False
     # Cell-skew handling for the inference aggregation: "auto" (default)
-    # runs the sampled skew probe once per (scheme, algorithm) and salts
-    # the one-shuffle cell aggregation iff a single (variable, cluster,
-    # value) cell dominates — real survey data's sentinel answers ("not
-    # selected" in one big cluster) are exactly that hot cell. False
-    # forces the plain plan, True forces salting.
+    # salts the one-shuffle cell aggregation iff a single (variable,
+    # cluster, value) cell dominates — real survey data's sentinel
+    # answers ("not selected" in one big cluster) are exactly that hot
+    # cell. The scheme's value census rules salting out with no probe
+    # whenever the answers number at least ~2.3x the rows (no cell can
+    # then hold 30% of the aggregation's input): with answers filled in,
+    # any scheme of more than 2 columns. Otherwise the sampled skew
+    # probe decides, once per (scheme, algorithm) (see
+    # operators.contingency.contingency_tables). False forces the plain
+    # plan, True forces salting.
     salt_cells: bool | str = "auto"
     # Wall-clock guard per family fit, reference parity with the hard
     # 3000 s LCA timeout (reference: src/kraken/app/clustering.py:
@@ -107,11 +114,19 @@ def select_scheme_columns(
     ]
 
 
+def _numeric(census: FE.ValueCensus, cols: list[str]) -> list[str]:
+    """The numeric columns among ``cols``, sniffed on the PRE-encoded
+    answers (the reference detects dtypes on self.data,
+    clustering.py:207-234); they drive the kmodes/kprototypes and
+    pure/mixed-LCA family dispatch."""
+    return [c for c in census.all_numeric if c in cols]
+
+
 def _family_kmeans(
     encoded: DataFrame,
     cols: list[str],
     cfg: SegmentationConfig,
-    num_cols: list[str],
+    census: FE.ValueCensus,
 ):
     std, _ = FE.standardize(encoded.select(cfg.id_col, *cols), cols)
     std = FE.assemble_array(std, cols)
@@ -127,7 +142,7 @@ def _family_gmm(
     encoded: DataFrame,
     cols: list[str],
     cfg: SegmentationConfig,
-    num_cols: list[str],
+    census: FE.ValueCensus,
 ):
     feats = FE.assemble_array(encoded, cols)
     fit = C.gmm_multi_seed(
@@ -140,11 +155,12 @@ def _family_kmodes(
     encoded: DataFrame,
     cols: list[str],
     cfg: SegmentationConfig,
-    num_cols: list[str],
+    census: FE.ValueCensus,
 ):
     # kmodes-vs-kprototypes by presence of numeric columns
     # (clustering.py:220-234): numeric features switch the family to the
     # mixed-distance variant, like the reference's dispatch
+    num_cols = _numeric(census, cols)
     if num_cols:
         cat = [c for c in cols if c not in num_cols]
         fit = KM.kprototypes_fit(
@@ -161,11 +177,16 @@ def _family_rules(
     encoded: DataFrame,
     cols: list[str],
     cfg: SegmentationConfig,
-    num_cols: list[str],
+    census: FE.ValueCensus,
 ):
     if not cfg.rules_col:
         return ("rules_based", None)
-    labeled = C.rules_based(encoded, cfg.rules_col)
+    codes = census[cfg.rules_col]
+    if cfg.rules_col in cols:
+        # ``encoded`` already holds the codes 0..m-1, and re-encoding
+        # them by sorted value is the identity
+        codes = {str(i): i for i in codes.values()}
+    labeled = C.rules_based(encoded, cfg.rules_col, code_map=codes)
     return ("rules_based", {"labels": labeled, "k": None, "seed": None})
 
 
@@ -173,13 +194,14 @@ def _family_lca(
     encoded: DataFrame,
     cols: list[str],
     cfg: SegmentationConfig,
-    num_cols: list[str],
+    census: FE.ValueCensus,
 ):
     # mixed-type dispatch (clustering.py:862-867): numeric features send
     # the survey to the depmixS4-style gaussian+multinomial mixture; the
     # reference models the LABEL-ENCODED values in both branches
     # (cluster_df = self.data_encoded, clustering.py:841-845), so the
     # gaussian factors see encoded codes here too — same semantics.
+    num_cols = _numeric(census, cols)
     cat = [c for c in cols if c not in num_cols]
     # Restart depth: poLCA's default is nrep=100 (reference lca.R:15).
     # Measured BIC-selection stability on the planted categorical
@@ -240,12 +262,16 @@ def run_scheme(
 ) -> dict:
     """One segmentation scheme: families -> inference -> metrics
     (clustering.py:1079-1138)."""
-    code_maps = FE.build_code_maps(cleaned, scheme_cols)
-    encoded = FE.label_encode(cleaned, scheme_cols, code_maps=code_maps).cache()
-    # numeric-vs-categorical sniff on the PRE-encoded data (the reference
-    # detects dtypes on self.data, clustering.py:207-234) drives the
-    # kmodes/kprototypes and pure/mixed-LCA family dispatch
-    num_cols = FE.sniff_numeric_columns(cleaned, scheme_cols)
+    # the scheme's value census, one pass over the cleaned answers: the
+    # code maps, the rules labels, the numeric sniff and the cell-skew
+    # bound all read it
+    census = FE.build_code_maps(
+        cleaned,
+        scheme_cols + [c for c in [cfg.rules_col] if c and c not in scheme_cols],
+    )
+    # a narrow projection of the cached cleaned table, so not cached
+    # itself: a second copy would cost its own materialization job
+    encoded = FE.label_encode(cleaned, scheme_cols, code_maps=census)
     algos = list(cfg.algorithms) + (["lca"] if cfg.include_lca else [])
     sc = spark.sparkContext
     # scheme-unique token: job groups are context-global, so two
@@ -263,7 +289,7 @@ def run_scheme(
             f"segmentation family {algo}",
             interruptOnCancel=True,
         )
-        return _FAMILIES[algo](encoded, scheme_cols, cfg, num_cols)
+        return _FAMILIES[algo](encoded, scheme_cols, cfg, census)
 
     import time as _time
 
@@ -342,34 +368,44 @@ def run_scheme(
             weight_col=cfg.weight_col,
             id_vars=[cfg.id_col],
             salt_cells=cfg.salt_cells,
+            # every family labels the encoded rows one to one, so the
+            # census counts are the aggregated columns' counts
+            value_counts=census.counts,
         )
         # deliver is computed on the driver from the collected cells and
-        # comes back as a local frame: discover, the business metrics
-        # and the parquet sink all read those rows, with no re-execution
-        deliver = deliver_stats(tables, alpha=1 - cfg.conf_interval)
+        # comes back as a local frame for discover and the parquet sink;
+        # the business metrics take its rows (deliver_rows), rebuilt
+        # from the same cells
+        alpha = 1 - cfg.conf_interval
+        deliver = deliver_stats(tables, alpha=alpha)
         discover = discover_stats(deliver)
         # third element of the reference's return_API_data triple
         # (chisquared_tester.py:1788-1792): per-cluster modal answer
-        modes = cluster_mode_list(
-            with_pred,
-            cluster_col="prediction",
-            variables=scheme_cols,
-            id_vars=[cfg.id_col],
-        )
-        feats = FE.assemble_array(encoded, scheme_cols).join(
-            labeled.select(cfg.id_col, "prediction"), cfg.id_col
+        modes = cluster_mode_list(tables)
+        # every quality and signal action reads the labeled features:
+        # cached, the label join runs once for all of them
+        feats = (
+            FE.assemble_array(encoded, scheme_cols)
+            .join(labeled.select(cfg.id_col, "prediction"), cfg.id_col)
+            .cache()
         )
         tgt_cols = [c for c in scheme_cols if "tgt" in c.lower()]
-        metrics = get_all_metrics(
-            feats,
-            deliver=deliver,
-            tgt_cols=tgt_cols,
-            n_seed=fit.get("seed"),
-            with_random_baseline=False,
-            # original string answers for social presence — label codes
-            # can never contain 'facebook' (metrics.py:840 full_data)
-            social_df=with_pred,
-        )
+        try:
+            metrics = get_all_metrics(
+                feats,
+                deliver=deliver_rows(tables, alpha),
+                tgt_cols=tgt_cols,
+                n_seed=fit.get("seed"),
+                with_random_baseline=False,
+                # original string answers for social presence — label
+                # codes can never contain 'facebook' (metrics.py:840
+                # full_data)
+                social_df=with_pred,
+                tables=tables,
+                feature_dim=len(scheme_cols),
+            )
+        finally:
+            feats.unpersist()
         metrics["algorithm"] = algo
         return {
             "labels": labeled,
@@ -408,7 +444,6 @@ def run_scheme(
                 results[algo] = fut.result()
         finally:
             finalize_pool.shutdown(wait=True)
-    encoded.unpersist()
     return results
 
 
@@ -472,11 +507,12 @@ def run_all_segmentations(
                         res["discover"],
                         f"{output_dir}/{scheme}/{algo}/discover",
                     )
-        metrics_df = spark.createDataFrame(
+        metrics_df = IO.local_frame(
+            spark,
             metrics_rows,
-            "survey: string, scheme: string, algorithm: string, "
-            "silhouette: double, davies_bouldin: double, "
-            "calinski_harabasz: double, n_clusters: string",
+            "survey string, scheme string, algorithm string,"
+            " silhouette double, davies_bouldin double,"
+            " calinski_harabasz double, n_clusters string",
         )
         IO.write_csv_single(metrics_df, f"{output_dir}/metrics_csv")
     return all_results

@@ -17,6 +17,11 @@ SURVEY §2.1 operator map (reference file:line in parens):
                       engine-hostile format; SURVEY S7)
 - S8 JSON put      -> `write_json_doc`    (main.py:108-113; aws_init.py:72-78)
 
+Driver-built tables (the inference results, the metrics table) enter
+Spark through `local_frame`: an Arrow table plans as a
+``LocalTableScan``, so sinks and collects over it run in the JVM
+without a Python worker.
+
 Paths are plain Hadoop-FS URIs: local paths here, `s3a://...` on a real
 cluster (same code path — S3A credentials/endpoint come from Spark conf,
 never from this module). Config documents (queues, column lists) stay
@@ -29,6 +34,22 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """``rows`` (tuples in ``schema`` order, a DDL string) as a frame
+    over an in-memory ``pyarrow.Table``. ``createDataFrame`` over Python
+    tuples plans as ``Scan ExistingRDD`` on a ``PythonRDD``, which forks
+    a Python worker for every action on it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    st = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(st.names, r)) for r in rows], schema=to_arrow_schema(st)
+    )
+    return spark.createDataFrame(table)
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:

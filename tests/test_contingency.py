@@ -133,7 +133,10 @@ def test_cluster_mode_list_matches_pandas_mode(spark):
     """cluster_mode_list == per-cluster DataFrame.mode(dropna=False).head(1)
     (reference chisquared_tester.py:1788-1792): nulls counted, ties to the
     ascending-sorted first, nulls last on ties, cluster column included."""
-    from qudo_etl_pipeline_spark.operators.contingency import cluster_mode_list
+    from qudo_etl_pipeline_spark.operators.contingency import (
+        cluster_mode_list,
+        contingency_tables,
+    )
 
     rows = [
         # c0: q1 tie a/b 2-2 -> 'a'; q2 mode is NULL (3 nulls vs 1 'x')
@@ -148,7 +151,9 @@ def test_cluster_mode_list_matches_pandas_mode(spark):
     df = spark.createDataFrame(rows, "cluster string, q1 string, q2 string")
     got = {
         (r["cluster"], r["variable"]): r["mode_value"]
-        for r in cluster_mode_list(df, "cluster", variables=["q1", "q2"]).collect()
+        for r in cluster_mode_list(
+            contingency_tables(df, "cluster", variables=["q1", "q2"])
+        ).collect()
     }
     assert got == {
         ("c0", "q1"): "a",

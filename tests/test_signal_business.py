@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from qudo_etl_pipeline_spark.ml import business as B
 from qudo_etl_pipeline_spark.ml import signal as S
+from qudo_etl_pipeline_spark.operators.contingency import contingency_tables
 
 
 @pytest.fixture(scope="module")
@@ -72,8 +73,15 @@ def test_social_presence(spark, labeled):
     )
 
 
+def _sizes(labeled):
+    return {
+        r["prediction"]: r["count"]
+        for r in labeled.groupBy("prediction").count().collect()
+    }
+
+
 def test_magnitude(spark, deliver, labeled):
-    m = B.magnitude(deliver.collect(), labeled, ["q1_tgt", "q2_tgt"])
+    m = B.magnitude(deliver.collect(), _sizes(labeled), ["q1_tgt", "q2_tgt"])
     # seg 0: 2 sig tgt rows / 2 tgt vars = 1.0 ratio * 0.5 share = 0.5
     # seg 1: 1 sig tgt row  / 2 tgt vars = 0.5 ratio * 0.5 share = 0.25
     assert m["0" if "0" in m else 0] == pytest.approx(0.5)
@@ -126,7 +134,7 @@ def test_deliver_metrics_null_segment_and_code(spark, deliver_nulls, labeled):
     c = B.communicability(rows)
     assert c["data"] == {"0": 1, "1": 1, None: 1}
     assert c["avg"] == pytest.approx(3 / 3)
-    m = B.magnitude(rows, labeled, ["q1_tgt", "q2_tgt"])
+    m = B.magnitude(rows, _sizes(labeled), ["q1_tgt", "q2_tgt"])
     assert m["0" if "0" in m else 0] == pytest.approx(0.5)
     assert m["all_clusters"] == pytest.approx(0.75)
     num_sig, num_sig_tgt, groups, tgt_groups = B.significant_variables_and_spread(
@@ -237,7 +245,8 @@ def test_get_all_metrics_composition(spark, labeled, deliver):
     )
     m = B.get_all_metrics(
         feats,
-        deliver=deliver,
+        contingency_tables(feats, "prediction", variables=["mc_social"]),
+        deliver=deliver.collect(),
         tgt_cols=["q1_tgt", "q2_tgt"],
         with_random_baseline=False,
     )
